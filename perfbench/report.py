@@ -23,10 +23,10 @@ def render(t: dict) -> str:
     m = t["metrics"]
     lines = [
         f"## {t['workload']} (seed {t['seed']})", "",
-        f"Untraced crawl {t['untraced_wall_s']:.2f} s; traced "
-        + ", ".join(f"{w:.2f}" for w in t["traced_wall_s"])
-        + f" s; tracing overhead {m['trace.overhead_s']:.2f} s. "
-        f"Untraced crawl: {fmt(m['crawl.jobs'])} jobs, {fmt(m['crawl.tasks'])} tasks.", "",
+        "Traced " + ", ".join(f"{w:.2f}" for w in t["traced_wall_s"])
+        + f" s; untraced crawl after them {t['untraced_wall_s']:.2f} s "
+        f"({fmt(m['crawl.jobs'])} jobs, {fmt(m['crawl.tasks'])} tasks); "
+        f"tracing overhead {m['trace.overhead_s']:.2f} s.", "",
         "| layer | " + " | ".join(COLS) + " |", "|---" * (len(COLS) + 1) + "|",
     ]
     for layer in [*LAYER_FUNCS, "stateio", "commit", "scheduler"]:

@@ -6,16 +6,17 @@ checks every crawl against the pure-Python oracle
 (``plans.oracle.run_oracle``): crawl order, seen set and, for decoded
 rows, ``invariant_ok``.
 
-    python3 perfbench/run.py --workload bulk_intake --seed 3 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload bulk_intake --seed 3 --seconds 5 --trace 0
     python3 perfbench/run.py --self-test
 
 ``--trace 0`` prints the end-to-end metrics of untraced crawls.
 ``--trace 1`` prints per-layer metrics from crawls traced by
 ``tracing.Tracer``, a ``local[1]`` rerun of round 0 for the row layers'
-speedup, and the tracing overhead against one untraced crawl. The last
-line of stdout is the JSON result; lines before it list each metric
-with its unit and sample count. Scratch files live in ``.perfbench/``
-under the repository root; traced runs leave their spans there.
+speedup, and the tracing overhead against an untraced crawl run after
+the traced ones. The last line of stdout is the JSON result; lines
+before it list each metric with its unit and sample count. Scratch
+files live in ``.perfbench/`` under the repository root; traced runs
+leave their spans there.
 """
 
 from __future__ import annotations
@@ -66,7 +67,7 @@ class CommitClock(LocalStateIO):
 
 class RssSampler:
     """Peak resident memory of this process's descendants (the driver
-    JVM and its Python workers), sampled every ``interval`` s. The JVM,
+    JVM and its Python workers), sampled every ``INTERVAL_S``. The JVM,
     our direct child, counts its resident set; the Python processes
     below it (the worker daemons and the workers they fork) count their
     proportional set size, so the pages forked workers share count once.
@@ -76,8 +77,9 @@ class RssSampler:
     heap's page tables under its memory-map lock, tens of ms per sample,
     and slow the crawl."""
 
-    def __init__(self, interval: float = 0.25):
-        self.interval = interval
+    INTERVAL_S = 0.25
+
+    def __init__(self):
         self.peak_bytes = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -115,7 +117,7 @@ class RssSampler:
     def _run(self):
         while not self._stop.is_set():
             self.peak_bytes = max(self.peak_bytes, self._tree_rss())
-            self._stop.wait(self.interval)
+            self._stop.wait(self.INTERVAL_S)
 
     def __enter__(self):
         self._thread.start()
@@ -166,8 +168,8 @@ class Bench:
         return self.spark
 
     def setup(self) -> float:
-        """Session, inputs, oracle and one full-size warm-up crawl;
-        returns setup_s (everything but the oracle, which is the
+        """Session, inputs, oracle and the workload's full-size warm-up
+        crawls; returns setup_s (everything but the oracle, which is the
         benchmark's own work)."""
         t0 = time.perf_counter()
         self.session(CORES)
@@ -177,11 +179,14 @@ class Bench:
         write_s = time.perf_counter() - t
         self.ref = oracle_reference(self.spark, self.wl, str(self.work / "inputs"))
         self.frames = read_inputs(self.spark, str(self.work / "inputs"))
-        warm = self.crawl(CommitClock())
-        self.check(warm)
+        warm = []
+        for _ in range(self.wl.warmups):
+            c = self.crawl(CommitClock())
+            self.check(c)
+            warm.append(c["wall_s"])
         log(f"setup: session {session_s:.2f}s, input write {write_s:.2f}s, "
-            f"warm-up crawl {warm['wall_s']:.2f}s ({warm['rows']} rows)")
-        return session_s + write_s + warm["wall_s"]
+            f"warm-up crawls {[round(w, 2) for w in warm]}s ({c['rows']} rows)")
+        return session_s + write_s + sum(warm)
 
     # ---- one crawl ----
     def crawl(self, io, max_rounds: int | None = None) -> dict:
@@ -245,19 +250,13 @@ class Bench:
             "crawl_urls_per_s": (statistics.median(rates), f"median of {n} crawls"),
             "first_round_s": (statistics.median(firsts), f"median of {n} crawls"),
             "round_s_p50": (statistics.median(gaps), f"median of {len(gaps)} round intervals"),
-            "setup_s": (setup_s, "session + input write + warm-up crawl"),
+            "setup_s": (setup_s, f"session + input write + {self.wl.warmups} warm-up crawls"),
             "peak_rss_mb": (rss.peak_bytes / 2**20, f"peak over {n} crawls"),
         }, dict(END_TO_END))
 
     def traced(self, seconds: float, trace_out: Path) -> dict:
         sc = self.spark.sparkContext
-        sc.setJobGroup("bench", "bench")
-        lo = job_id_high(sc) + 1
-        u = self.crawl(CommitClock())
-        crawl_stats = stage_metrics(sc, lo, job_id_high(sc), None)["crawl"]
-        ref_rows = self.check(u)
-
-        tables, walls, tracers = [], [], []
+        tables, walls, tracers, crawls = [], [], [], []
         t_end = time.perf_counter() + seconds
         while True:
             tracer = Tracer(self.spark, f"pb{self.n_crawls}")
@@ -268,11 +267,20 @@ class Bench:
             tables.append(tracer.layer_table(stages))
             walls.append(c["wall_s"])
             tracers.append(tracer)
-            self.check(c, ref_rows)
+            crawls.append(c)
             if time.perf_counter() >= t_end:
                 break
         metrics = {k: statistics.median(t[k] for t in tables) for k in tables[0]}
         r0_four = {k: statistics.median(t.round_layer_wall(0)[k] for t in tracers) for k in ROW_LAYERS}
+
+        # the untraced crawl runs after the traced ones, on a JVM at least
+        # as warm as theirs, so the overhead below is an upper bound
+        lo = job_id_high(sc) + 1
+        u = self.crawl(CommitClock())
+        crawl_stats = stage_metrics(sc, lo, job_id_high(sc), None)["crawl"]
+        ref_rows = self.check(u)
+        for c in crawls:
+            self.check(c, ref_rows)
 
         # round 0 again at local[1]: the row layers' N -> 4N speedup
         self.session(1)
@@ -325,7 +333,9 @@ def run(wl, seed: int, seconds: float, trace: bool, work: Path) -> dict:
     try:
         setup_s = bench.setup()
         if trace:
-            metrics = bench.traced(seconds, ROOT / ".perfbench" / f"trace-{bench.wl.name}-seed{seed}.json")
+            # beside the run's work directory: .perfbench/ for a run, the
+            # (deleted) run directory for the self-test's tiny runs
+            metrics = bench.traced(seconds, work.parent / f"trace-{wl.name}-seed{seed}.json")
         else:
             metrics = bench.end_to_end(seconds, setup_s)
     finally:
@@ -368,7 +378,7 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--workload", choices=sorted(WORKLOADS))
     ap.add_argument("--seed", type=int, default=0)
-    ap.add_argument("--seconds", type=float, default=10)
+    ap.add_argument("--seconds", type=float, default=5)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--self-test", action="store_true")
     args = ap.parse_args()
