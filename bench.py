@@ -4,7 +4,7 @@ Headline: the full multi-round crawl (frontier throughput = URLs
 completing canonicalize → dedup → schedule per second of loop time),
 plus the heavy driver-table queries. Input scale follows
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1); parallelism
-follows $SPARK_GRAFT_CPUS (default 32).
+follows $SPARK_GRAFT_CPUS (default: the machine's core count).
 
 Scaling evidence (north rule: N vs 4N executors): run this twice,
   SPARK_GRAFT_CPUS=8 python bench.py
@@ -25,11 +25,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
 ONLY = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")  # "pipeline" → scaling job only
-# A/B knobs for the scaling campaign (defaults = the committed protocol)
-SHUFFLE_PARTS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
-EXTRA_CONF = json.loads(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "{}"))
+PARTITIONS = 64  # shuffle partitions, fixed across cluster sizes: identical plans
 SF = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", "") or 0.1)
 
 BENCH_QUERIES = [
@@ -258,14 +256,13 @@ def frontier_pipeline_once(spark, n_urls: int, n_hosts: int, n_images: int,
     from pyspark.sql import functions as F
 
     workdir = workdir or tempfile.mkdtemp(prefix="cola_pipe_", dir="/dev/shm")
-    # plan-variant A/B knob for the scaling campaign. Default = the
-    # continuation-session committed job: shuffled (hinted) robots +
-    # caps joins — the operators' broadcast=False behavior, replacing
-    # the serial per-round broadcast builds the planner's Range-size
-    # estimates silently picked — the cut windows REUSING the caps
-    # join's host partitioning (schedule_cut spread=False), and the
-    # scheduled log pruned to the fields stage B and the round loop
-    # consume (url, url_canon, host, priority, seq, host_rank).
+    # The committed job: shuffled (hinted) robots + caps joins — the
+    # operators' broadcast=False behavior, replacing the serial
+    # per-round broadcast builds the planner's Range-size estimates
+    # silently picked — the cut windows REUSING the caps join's host
+    # partitioning (schedule_cut spread=False), and the scheduled log
+    # pruned to the fields stage B and the round loop consume (url,
+    # url_canon, host, priority, seq, host_rank).
     #
     # Why spread=False is sound FOR THIS WORKLOAD and not in general:
     # the admission dedup upstream bounds per-host pending to the
@@ -276,58 +273,21 @@ def frontier_pipeline_once(spark, n_urls: int, n_hosts: int, n_images: int,
     # BEFORE any host-keyed stage. With UNBOUNDED per-host pending
     # (a mega-site backlog) spread=False co-locates that host's sort
     # in one task: use the operator default spread=True (the salted
-    # repartition, entry()/run_crawl's shape) or spread="join" at
-    # frontier:host ratios where replicated-table joins win. All four
-    # shapes' 8/32-core A/Bs: BENCH/BASELINE.md. Tokens:
-    #   wide     — keep ALL frontier columns in the log (pre-
-    #              continuation job shape, for back-comparison)
-    #   spread   — restore the explicit phase-1 (host, _salt)
-    #              repartition (the skew-unbounded production shape)
-    #   saltjoin — key the robots AND caps joins on (host, _salt) with
-    #              salt-replicated rule/cap tables: one salted frontier
-    #              exchange does skew-spreading + both joins + the
-    #              phase-1 window (wins when frontier >> hosts x salt)
-    #   semijoin — the sort-free hash-agg + join-back admission shape
-    #              (measured SLOWER: the join-back self-join makes
-    #              Catalyst recompute the parse-heavy frontier scan
-    #              twice — jvm32 8.1s vs minby's 5.4s; see admit
-    #              docstring. Kept as the documented negative result)
-    variant = os.environ.get("SPARK_GRAFT_PIPE_VARIANT", "")
+    # repartition, entry()/run_crawl's shape). The shapes' 8/32-core
+    # A/Bs: BENCH/BASELINE.md.
     seeds = gen_frontier_seeds(spark, n_urls, n_hosts=n_hosts, parts=parts)
     frontier = prepare_frontier(seeds.select("url", "priority", "seq", "force"))
-    admitted, _ = admit(
-        frontier, spark.createDataFrame([], "url_hash long"),
-        shape="semijoin" if "semijoin" in variant else "minby",
-    )
+    admitted, _ = admit(frontier, spark.createDataFrame([], "url_hash long"))
     budgets = gen_budgets(spark, n_hosts).withColumn("rate_per_round", F.lit(50))
     # web-scale host universe (400k at sf0.1, 10^7+ at the design
     # point): the caps + robots joins are parallel shuffled joins, not
     # serial per-round broadcast builds (operator-level shuffle_hash
     # hints; continuation-session A/B at both 8 and 32 cores)
-    if "saltjoin" in variant:
-        admitted = admitted.withColumn(
-            "_salt", F.pmod(F.col("url_hash"), F.lit(16))
-        )
-        allowed = robots_gate(
-            admitted, gen_robots(spark, n_hosts), broadcast=False,
-            salt_col="_salt",
-        )
-        scheduled = schedule_cut(
-            allowed, budget_caps(init_budget_state(budgets)),
-            broadcast_caps=False, spread="join",
-        )
-    else:
-        allowed = robots_gate(
-            admitted, gen_robots(spark, n_hosts), broadcast=False
-        )
-        scheduled = schedule_cut(
-            allowed, budget_caps(init_budget_state(budgets)),
-            broadcast_caps=False, spread="spread" in variant,
-        )
-    if "wide" not in variant:
-        scheduled = scheduled.select(
-            "url", "url_canon", "host", "priority", "seq", "host_rank"
-        )
+    allowed = robots_gate(admitted, gen_robots(spark, n_hosts), broadcast=False)
+    scheduled = schedule_cut(
+        allowed, budget_caps(init_budget_state(budgets)),
+        broadcast_caps=False, spread=False,
+    ).select("url", "url_canon", "host", "priority", "seq", "host_rank")
 
     def gc_millis():
         beans = (
@@ -379,7 +339,7 @@ def main() -> None:
     _os.makedirs("/dev/shm/spark-local", exist_ok=True)
     spark = get_spark(
         "cola_spark_bench", master=f"local[{CPUS}]",
-        shuffle_partitions=SHUFFLE_PARTS,  # fixed across sizes: identical plans
+        shuffle_partitions=PARTITIONS,
         extra_conf={
             # measured tunings (see BENCH/BASELINE.md + memory notes):
             # AQE's sequential stage materialization adds ~1s/stage of
@@ -388,7 +348,6 @@ def main() -> None:
             "spark.sql.adaptive.enabled": "false",
             "spark.local.dir": "/dev/shm/spark-local",
             "spark.sql.execution.arrow.maxRecordsPerBatch": "2000",
-            **EXTRA_CONF,
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -419,7 +378,7 @@ def main() -> None:
             "pipeline_scheduled": best["scheduled"],
             "pipeline_urls_per_sec": round(n_pipe / pipe_secs, 1),
             "jvm_gc_secs": best["jvm_gc_secs"], "py_gc_secs": best["py_gc_secs"],
-            "shuffle_parts": SHUFFLE_PARTS,
+            "shuffle_parts": PARTITIONS,
         }))
         spark.stop()
         return

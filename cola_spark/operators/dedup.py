@@ -9,7 +9,7 @@ Sequential put order decides which of two same-key units in one batch
 survives (first wins).
 
 Spark re-expression: one batch of candidate rows per round;
-  * within-batch first-wins  → row_number over (url_hash ORDER BY seq) = 1
+  * within-batch first-wins  → min_by(…, seq) per url_hash
   * not-seen-before          → left_anti join against the seen table
   * force branch             → unioned past both checks
 The anti-join is the exact-correctness oracle; the approximate fast
@@ -61,81 +61,31 @@ def prepare_frontier(raw: DataFrame) -> DataFrame:
     return df.select(*FRONTIER_COLS)
 
 
-def admit(
-    candidates: DataFrame, seen: DataFrame, shape: str = "minby"
-) -> tuple[DataFrame, DataFrame]:
+def admit(candidates: DataFrame, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Dedup one batch of candidates against the seen set (exact mode).
 
     Returns (admitted, newly_seen_hashes). ``seen`` is a DataFrame with
     a single ``url_hash`` column. Force rows pass unchecked and do not
     enter ``seen`` (cola force semantics).
 
-    Within-batch first-wins, two physical shapes (row-identical — seq
-    is globally unique, so first-by-seq is deterministic either way):
-
-      shape="minby" (default): min_by(col, seq) aggregates per
-        url_hash — an aggregate, NOT a row_number window: map-side
-        partial combine, no full (url_hash, seq) sort. Measured on the
-        2M-row bench admission: min_by 1.83s vs window 2.06s vs
-        min(struct) 2.73s at local[32], best 8→32 scaling of the three
-        (0.69). CAVEAT: min_by's aggregation buffer holds STRING
-        payload columns, so the planner falls back to SortAggregate —
-        the plan still pays partial+final sorts of the full-width rows.
-      shape="semijoin": hash-aggregate min(seq) per url_hash (numeric
-        buffer → real HashAggregate) then a join back on url_hash to
-        recover the first row — zero sorts. MEASURED SLOWER at bench
-        scale (jvm32 8.1s vs 5.4s): the join-back references the
-        frontier twice, and with no subplan CSE Catalyst recomputes
-        the parse-heavy canonicalize scan for each reference (the two
-        exchanges don't canonicalize equal because one side is
-        column-pruned, so ReuseExchange can't kick in either). A
-        single-pass aggregate beats a sort-free two-pass plan when the
-        per-row upstream compute dominates — kept as the documented
-        negative result; minby stays the default.
+    Within-batch first-wins is a min_by(col, seq) aggregate per
+    url_hash (seq is globally unique, so first-by-seq is deterministic)
+    — an aggregate, NOT a row_number window: map-side partial combine,
+    no full (url_hash, seq) sort. Measured on the 2M-row bench
+    admission: min_by 1.83s vs window 2.06s vs min(struct) 2.73s at
+    local[32], best 8→32 scaling of the three (0.69). CAVEAT: min_by's
+    aggregation buffer holds STRING payload columns, so the planner
+    falls back to SortAggregate — the plan still pays partial+final
+    sorts of the full-width rows. A sort-free hash-agg + join-back
+    shape measured slower (BENCH/BASELINE.md, "Deleted shapes").
     """
     nonforce = candidates.filter(~F.col("force"))
-    if shape == "semijoin":
-        # ONE explicit url_hash exchange that everything downstream
-        # reuses: the hash-agg runs on it with no exchange of its own;
-        # the join-back keys on url_hash ALONE (exact-key
-        # co-partitioning, no conf dependence — joining on
-        # (url_hash, seq) would re-exchange both sides since subset
-        # co-partitioning is off by default) with the first-seq test as
-        # a post-join filter; the seen anti-join inherits the url_hash
-        # partitioning from the join output. Zero further frontier
-        # exchanges and zero frontier sorts (both joins shuffle_hash).
-        part = nonforce.repartition("url_hash")
-        keys = (
-            part.groupBy("url_hash")
-            .agg(F.min("seq").alias("_first_seq"))
-            .hint("shuffle_hash")
-        )
-        # the first-seq test is written as a subtraction ON PURPOSE:
-        # `seq == _first_seq` gets folded back into the join as a
-        # second equi-key (keys become (url_hash, seq) and BOTH sides
-        # re-exchange); `seq - _first_seq == 0` mixes the two sides in
-        # one expression, so it stays a non-equi join condition and the
-        # join keys stay url_hash alone (exact BIGINT arithmetic —
-        # equivalent predicate)
-        first = (
-            part.join(keys, "url_hash")
-            .filter((F.col("seq") - F.col("_first_seq")) == 0)
-            .drop("_first_seq")
-        )
-        fresh = first.join(
-            seen.select("url_hash").hint("shuffle_hash"),
-            "url_hash",
-            "left_anti",
-        )
-        admitted = candidates.filter(F.col("force")).unionByName(fresh)
-        return admitted, fresh.select("url_hash")
-    else:
-        rest = [c for c in nonforce.columns if c != "url_hash"]
-        first = (
-            nonforce.groupBy("url_hash")
-            .agg(*[F.min_by(c, "seq").alias(c) for c in rest])
-            .select(*nonforce.columns)
-        )
+    rest = [c for c in nonforce.columns if c != "url_hash"]
+    first = (
+        nonforce.groupBy("url_hash")
+        .agg(*[F.min_by(c, "seq").alias(c) for c in rest])
+        .select(*nonforce.columns)
+    )
     fresh = first.join(seen.select("url_hash"), "url_hash", "left_anti")
     admitted = candidates.filter(F.col("force")).unionByName(fresh)
     return admitted, fresh.select("url_hash")

@@ -292,8 +292,9 @@ def hits_scores(
 
     Scale shape: two shuffles per round (groupBy dst, groupBy src) over
     the distinct edge list, normalization totals are broadcast 1-row
-    aggregates, node universe built once; localCheckpoint per round
-    cuts lineage like the CC loop. Nodes with no in-edges (resp.
+    aggregates, node universe built once; the edge list and nodes are
+    localCheckpointed once up front, and the score frames every 3rd
+    round (never at the default iters=2). Nodes with no in-edges (resp.
     out-edges) settle at authority 0 (resp. hub 0) via left-join
     coalesce — mirrored in the oracle."""
     e = edges.select(

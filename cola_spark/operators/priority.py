@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 def schedule_cut(
     pending: DataFrame, caps: DataFrame, salt_buckets: int = 16,
-    broadcast_caps: bool = True, spread: "bool | str" = True,
+    broadcast_caps: bool = True, spread: bool = True,
 ) -> DataFrame:
     """Pick this round's crawl set: per host, the cap(host) first rows in
     (priority, seq) order. ``caps``: (host, cap). Returns scheduled rows
@@ -52,47 +52,24 @@ def schedule_cut(
     host, which SATISFIES the phase-1 window's (host, salt) clustering
     (subset rule) — so without an explicit exchange the salt bounds
     each window GROUP's sort but a Zipf-hot host's rows stay physically
-    in ONE partition. Three shapes:
+    in ONE partition:
 
       * spread=True (default, skew-safe): explicit (host, _salt)
         repartition after the host-keyed join — a mega-host spreads
         over salt_buckets partitions for the phase-1 sort+cut, at the
         cost of one extra frontier-scale exchange;
-      * spread="join" (skew-safe AND exchange-minimal): the caps table
-        is replicated once per salt value and the join itself keys on
-        (host, _salt) — the ONE join exchange both spreads hot hosts
-        and feeds the phase-1 window directly (its output partitioning
-        matches the window's clustering exactly). Pair with
-        robots_gate(salt_col=...) upstream and the whole gate+cut runs
-        on a single salted frontier partitioning. Requires ``pending``
-        to already carry ``_salt`` if the caller wants the robots join
-        co-keyed; otherwise it is computed here;
       * spread=False: elide spreading entirely — fastest when the host
         distribution is known to be politeness-bounded (many hosts,
         none dominating). A/Bs for the shapes: BENCH/BASELINE.md.
     """
     active = caps.filter(F.col("cap") > 0)
-    salt = F.pmod(F.col("url_hash"), F.lit(salt_buckets))
-    if "_salt" not in pending.columns:
-        pending = pending.withColumn("_salt", salt)
-    if not broadcast_caps and spread == "join":
-        active = (
-            active.withColumn(
-                "_salt",
-                F.explode(F.sequence(F.lit(0), F.lit(int(salt_buckets) - 1))),
-            )
-            .withColumn("_salt", F.col("_salt").cast("long"))
-            .hint("shuffle_hash")
-        )
-        df = pending.join(active, ["host", "_salt"], "inner")
-    else:
-        if not broadcast_caps:
-            active = active.hint("shuffle_hash")
-        df = pending.join(
-            F.broadcast(active) if broadcast_caps else active, "host", "inner"
-        )
-        if not broadcast_caps and spread:
-            df = df.repartition("host", "_salt")
+    if not broadcast_caps:
+        active = active.hint("shuffle_hash")
+    df = pending.withColumn(
+        "_salt", F.pmod(F.col("url_hash"), F.lit(salt_buckets))
+    ).join(F.broadcast(active) if broadcast_caps else active, "host", "inner")
+    if not broadcast_caps and spread:
+        df = df.repartition("host", "_salt")
     w1 = Window.partitionBy("host", "_salt").orderBy("priority", "seq")
     phase1 = (
         df.withColumn("_r1", F.row_number().over(w1))

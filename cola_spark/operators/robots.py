@@ -14,8 +14,7 @@ from pyspark.sql import functions as F
 
 
 def robots_gate(
-    frontier: DataFrame, robots: DataFrame, broadcast: bool = True,
-    salt_col: str | None = None, salt_buckets: int = 16,
+    frontier: DataFrame, robots: DataFrame, broadcast: bool = True
 ) -> DataFrame:
     """Drop frontier rows disallowed by robots (supports multiple
     disallow prefixes per host).
@@ -34,38 +33,12 @@ def robots_gate(
     build becomes a parallel host-keyed exchange (and with
     schedule_cut(spread=False) the downstream cut windows can reuse
     that partitioning outright — ClusteredDistribution is satisfied by
-    a key subset).
-
-    ``salt_col`` (shuffled path only): name of a salt column already on
-    ``frontier`` (pmod of the url hash, values in [0, salt_buckets)).
-    The rules are replicated once per salt value and the anti-join keys
-    on (host, salt) instead of host — every pending row still meets
-    every rule of its host, so the result is row-identical, but the
-    frontier exchange becomes hashpartitioning(host, salt): a Zipf-hot
-    host SPREADS over salt_buckets partitions here, and the downstream
-    salted cut (schedule_cut(spread="join")) reuses this exact
-    partitioning — one salted exchange serves skew-spreading, both
-    joins, and the phase-1 window. Rule replication is host-scale ×
-    salt_buckets (tiny next to the frontier)."""
+    a key subset)."""
     r = robots.select("host", "disallow_prefix")
-    if broadcast:
-        r = F.broadcast(r)
-    elif salt_col is not None:
-        r = (
-            r.withColumn(
-                "_rg_salt",
-                F.explode(F.sequence(F.lit(0), F.lit(int(salt_buckets) - 1))),
-            )
-            .withColumn("_rg_salt", F.col("_rg_salt").cast("long"))
-            .hint("shuffle_hash")
-        )
-    else:
-        r = r.hint("shuffle_hash")
+    r = F.broadcast(r) if broadcast else r.hint("shuffle_hash")
     cond = (frontier["host"] == r["host"]) & frontier["path"].startswith(
         r["disallow_prefix"]
     )
-    if not broadcast and salt_col is not None:
-        cond = cond & (frontier[salt_col] == r["_rg_salt"])
     return frontier.join(r, cond, "left_anti")
 
 

@@ -91,12 +91,6 @@ class CrawlConfig:
     # robots-rules join — broadcast builds are serial per-round work;
     # the False path carries an explicit shuffle_hash hint so the
     # planner's size estimates can't silently pick a broadcast anyway)
-    spread: "bool | str" = True  # phase-1 skew spreading on the shuffled
-    # cut path: True = explicit (host, _salt) repartition (safe under
-    # unbounded per-host pending — the default), False = reuse the caps
-    # join's host partitioning (fastest when per-host pending is
-    # bounded), "join" = (host, salt)-keyed replicated-caps join (wins
-    # at frontier:host ratios >> salt_buckets); schedule_cut docstring
     dedup_mode: str = "exact"  # exact | hybrid | cuckoo
     filter_kind: str = "cuckoo"  # cuckoo | bloom (per-partition blob class)
     filter_parts: int = 32
@@ -246,7 +240,6 @@ def run_crawl(
             schedule_cut(
                 pending_next, caps,
                 cfg.salt_buckets, broadcast_caps=cfg.broadcast_caps,
-                spread=cfg.spread,
             ),
             cfg.global_cap,
         )

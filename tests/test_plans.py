@@ -72,13 +72,10 @@ def test_shuffle_mode_knobs_match_broadcast(spark):
 
 
 def test_spread_shapes_row_identical(spark):
-    """All skew-spreading shapes of the shuffled gate+cut — explicit
-    salted repartition (True), window-reuse (False), and the
-    (host, salt)-keyed replicated-table join ("join", with the robots
-    join co-keyed via salt_col) — are physical-plan knobs only: rows
-    must match the broadcast reference exactly."""
-    from pyspark.sql import functions as F
-
+    """Both skew-spreading shapes of the shuffled gate+cut — explicit
+    salted repartition (True) and window-reuse (False) — are
+    physical-plan knobs only: rows must match the broadcast reference
+    exactly."""
     from cola_spark.operators.budget import budget_caps, init_budget_state
     from cola_spark.operators.dedup import prepare_frontier
     from cola_spark.operators.priority import schedule_cut
@@ -103,39 +100,6 @@ def test_spread_shapes_row_identical(spark):
             caps, broadcast_caps=False, spread=spread,
         )
         assert sorted(map(key, got.collect())) == ref, spread
-
-    salted = fr.withColumn("_salt", F.pmod(F.col("url_hash"), F.lit(16)))
-    gate_sj = robots_gate(salted, robots, broadcast=False, salt_col="_salt")
-    got = schedule_cut(gate_sj, caps, broadcast_caps=False, spread="join")
-    assert sorted(map(key, got.collect())) == ref
-    # the salted-join gate itself matches the broadcast gate row-wise
-    assert sorted(r.url for r in gate_sj.collect()) == sorted(
-        r.url for r in ref_gate.collect()
-    )
-
-
-def test_admit_shapes_row_identical(spark):
-    """admit's two physical shapes (min_by SortAggregate vs hash-agg +
-    join-back) are row-identical including the first-wins row choice
-    and the returned newly-seen set."""
-    from cola_spark.operators.dedup import admit, prepare_frontier
-    from cola_spark.sources import gen_frontier_seeds
-
-    fr = prepare_frontier(
-        gen_frontier_seeds(spark, 3000, n_hosts=30).select(
-            "url", "priority", "seq", "force"
-        )
-    )
-    seen = fr.limit(40).select("url_hash")  # nonempty seen set
-    key = lambda df: sorted(
-        (r.url_hash, r.seq) for r in df.select("url_hash", "seq").collect()
-    )
-    a1, s1 = admit(fr, seen, shape="minby")
-    a2, s2 = admit(fr, seen, shape="semijoin")
-    assert key(a1) == key(a2) and len(key(a1)) > 0
-    assert sorted(r.url_hash for r in s1.collect()) == sorted(
-        r.url_hash for r in s2.collect()
-    )
 
 
 def test_budget_caps_join_is_broadcast(spark):
