@@ -7,84 +7,83 @@ separate maintenance job) folds them into a single hash-partitioned
 snapshot — the same role Iceberg's rewrite_data_files maintenance
 action plays; the filter layout keeps only the newest blob per part.
 
-Crash-safety protocol (commit-then-remove, never the reverse):
-  1. write the folded snapshot to a tmp dir (Spark write);
-  2. atomically rename it to a FRESH ``compacted=<k>`` dir (k strictly
-     increasing — never collides with a round-numbered ``delta=<r>``
-     dir or an older compacted dir);
-  3. only then remove the superseded delta/compacted dirs.
-A crash at ANY point leaves the readers seeing a *superset* of the
-state: duplicated seen hashes are harmless to the anti-join, and
-duplicated filter blobs are byte-identical (the compacted blob for a
-part IS the latest delta's blob), so the latest-per-part window is
-deterministic even on ties.
+Crash-safety protocol: the round manifest is the one commit point, as
+in the crawl loop (scheduler.py).
+  1. write the folded snapshot to ``compacted=<k>``, k one past the
+     newest live compacted dir;
+  2. flip the manifest to name ``compacted=<k>`` instead of the dirs
+     it folds (one atomic write);
+  3. only then remove the folded dirs.
+A crash before the flip leaves an orphan ``compacted=<k>`` that no
+reader sees and the next compaction overwrites; a crash after it
+leaves folded dirs that no reader sees either.
+
+Maintenance assumes a single writer: it runs between crawl
+invocations, never concurrently with ``run_crawl`` on the same workdir.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from cola_spark.plans.scheduler import CrawlConfig, _p, _read_filters, _read_seen
+from cola_spark.plans.scheduler import (
+    CrawlConfig, _manifest, _p, _read_filters, _read_seen, latest_round,
+)
 
 
-def _state_dirs(cfg: CrawlConfig, kind: str) -> tuple[list[str], list[str], int]:
-    """(delta_dirs, compacted_dirs, next_compaction_index)."""
-    deltas = cfg.io.list_dirs(_p(cfg, kind, "delta=*"))
-    compacted = cfg.io.list_dirs(_p(cfg, kind, "compacted=*"))
-    nxt = 1 + max(
-        (int(os.path.basename(d).split("=")[1]) for d in compacted), default=-1
-    )
-    return deltas, compacted, nxt
-
-
-def _commit_compaction(cfg: CrawlConfig, kind: str, df) -> int:
-    """Write → rename-commit → remove superseded. Returns dirs removed.
-    All driver-side FS mutations go through the cfg.io seam (the Spark
-    parquet write speaks the workdir URI natively)."""
-    deltas, compacted, nxt = _state_dirs(cfg, kind)
-    if len(deltas) + len(compacted) <= 1:
+def _commit_compaction(cfg: CrawlConfig, kind: str, fold) -> int:
+    """Write ``fold(live)`` → flip the manifest → remove the folded
+    dirs. Returns dirs removed. All driver-side FS mutations go through
+    the cfg.io seam (the Spark parquet write speaks the workdir URI
+    natively)."""
+    m = _manifest(cfg)
+    live = [] if m is None else m[kind]
+    if len(live) <= 1:
         return 0
-    tmp = _p(cfg, kind, "_compact_tmp")
-    cfg.io.remove_dir(tmp)  # stale tmp from a crashed run
-    df.write.mode("overwrite").parquet(tmp)
-    cfg.io.rename(tmp, _p(cfg, kind, f"compacted={nxt}"))  # the commit point
-    removed = 0
-    for d in deltas + compacted:  # superseded only after the commit
-        cfg.io.remove_dir(d)
-        removed += 1
-    return removed
+    k = 1 + max((int(d.split("=")[1]) for d in live if d.startswith("compacted=")), default=-1)
+    fold(live).write.mode("overwrite").parquet(_p(cfg, kind, f"compacted={k}"))
+    cfg.io.write_json_atomic(_p(cfg, "manifest.json"), {**m, kind: [f"compacted={k}"]})
+    for d in live:  # folded dirs only after the commit
+        cfg.io.remove_dir(_p(cfg, kind, d))
+    return len(live)
 
 
 def compact_seen(spark: SparkSession, cfg: CrawlConfig) -> int:
-    """Fold all seen deltas into one snapshot; returns dirs removed.
-    distinct() because a crashed prior compaction can leave the same
-    hash in both a compacted dir and its source deltas."""
-    seen = _read_seen(spark, cfg).distinct()
-    folded = seen.repartition(
-        cfg.seen_parts, F.pmod(F.col("url_hash"), F.lit(cfg.seen_parts))
-    )
-    return _commit_compaction(cfg, "seen", folded)
+    """Fold all live seen dirs into one snapshot; returns dirs removed.
+    The live dirs are disjoint (a round's delta holds only hashes absent
+    from the live dirs it was admitted against), so the fold keeps every
+    row."""
+
+    def fold(live: list[str]):
+        seen = _read_seen(spark, cfg, live)
+        return seen.repartition(cfg.seen_parts, F.pmod(F.col("url_hash"), F.lit(cfg.seen_parts)))
+
+    return _commit_compaction(cfg, "seen", fold)
 
 
 def compact_filters(spark: SparkSession, cfg: CrawlConfig) -> int:
     """Keep only the latest blob per part; returns dirs removed."""
-    latest = _read_filters(spark, cfg, with_delta=True)
-    return _commit_compaction(cfg, "filters", latest)
+    return _commit_compaction(
+        cfg, "filters", lambda live: _read_filters(spark, cfg, live, with_delta=True)
+    )
 
 
 def vacuum_old_state(cfg: CrawlConfig, keep_last: int = 2) -> int:
-    """Drop per-round pending/budget snapshots older than the last
-    ``keep_last`` rounds (the manifest only ever points at the newest).
-    Crawl logs are never vacuumed — they are the output."""
-    dirs = sorted(
-        cfg.io.list_dirs(_p(cfg, "state", "round=*")),
-        key=lambda d: int(os.path.basename(d).split("=")[1]),
-    )
-    removed = 0
-    for d in dirs[:-keep_last] if keep_last else dirs:
+    """Drop per-round pending/budget snapshots older than the committed
+    round and the ``keep_last - 1`` rounds before it. The committed
+    round comes from the manifest: state a crashed round left behind
+    never counts as the newest. Crawl logs are never vacuumed — they
+    are the output."""
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
+    last = latest_round(cfg)
+    if last is None:
+        return 0
+    old = [
+        d for d in cfg.io.list_dirs(_p(cfg, "state", "round=*"))
+        if int(d.rsplit("=", 1)[1]) <= last - keep_last
+    ]
+    for d in old:
         cfg.io.remove_dir(d)
-        removed += 1
-    return removed
+    return len(old)

@@ -27,6 +27,13 @@ Next-round candidates (children + retries) are *derived from the
 materialized log*, not separately persisted — one fewer write per
 round and resume-safe for free.
 
+Commit protocol: ``manifest.json`` is the single commit point
+(Iceberg-snapshot semantics). It names the last committed round and
+the live ``seen`` and ``filters`` directories, and readers read only
+those and rounds ``0..round`` — never a listing. What a crashed round
+left on disk stays invisible until the resumed round overwrites it.
+Compaction (maintenance.py) commits through the same manifest.
+
 Determinism contract (the BASELINE order-match criterion): the global
 crawl order is the total order (round, priority, host, seq). Nothing
 depends on partition iteration order or parallelism, so the same seeds
@@ -114,41 +121,35 @@ def latest_round(cfg: CrawlConfig) -> int | None:
     return None if m is None else m["round"]
 
 
-def _commit_manifest(cfg: CrawlConfig, rnd: int, stats: dict) -> None:
-    """Iceberg-snapshot-style commit: round r state is only visible once
-    the manifest points at it (atomic write through the IO seam)."""
+def _commit_manifest(cfg: CrawlConfig, rnd: int, stats: dict, live: dict) -> None:
+    """Iceberg-snapshot-style commit: round r state (and the ``live``
+    seen/filters dirs) is only visible once the manifest points at it
+    (atomic write through the IO seam)."""
     mf = _p(cfg, "manifest.json")
     prev = cfg.io.read_json(mf)
-    hist = (prev or {}).get("history", [])
+    hist = (prev or {}).get("history", [])[:rnd]  # a fresh crawl starts empty
     cfg.io.write_json_atomic(
-        mf, {"round": rnd, "stats": stats, "history": hist + [stats]}
+        mf, {"round": rnd, **live, "stats": stats, "history": hist + [stats]}
     )
 
 
-def _state_glob(cfg: CrawlConfig, kind: str) -> list[str]:
-    """Per-round deltas plus compaction snapshots (maintenance.py);
-    overlap between the two is a superset by construction — harmless."""
-    return sorted(
-        cfg.io.list_dirs(_p(cfg, kind, "delta=*"))
-        + cfg.io.list_dirs(_p(cfg, kind, "compacted=*"))
-    )
-
-
-def _read_seen(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
-    dirs = _state_glob(cfg, "seen")
-    if not dirs:
+def _read_seen(spark: SparkSession, cfg: CrawlConfig, live: list[str]) -> DataFrame:
+    """The seen set over the live seen directories a manifest names."""
+    if not live:
         return spark.createDataFrame([], "url_hash long")
-    return spark.read.parquet(*dirs).select("url_hash")
+    return spark.read.parquet(*[_p(cfg, "seen", d) for d in live]).select("url_hash")
 
 
-def _read_filters(spark: SparkSession, cfg: CrawlConfig, with_delta: bool = False) -> DataFrame:
-    dirs = _state_glob(cfg, "filters")
-    if not dirs:
+def _read_filters(
+    spark: SparkSession, cfg: CrawlConfig, live: list[str], with_delta: bool = False
+) -> DataFrame:
+    """Latest blob per part over the live filter directories."""
+    if not live:
         cols = "part int, blob binary" + (", delta int" if with_delta else "")
         return spark.createDataFrame([], cols)
     from pyspark.sql import Window
 
-    df = spark.read.parquet(*dirs)
+    df = spark.read.parquet(*[_p(cfg, "filters", d) for d in live])
     w = Window.partitionBy("part").orderBy(F.desc("delta"))
     out_cols = ["part", "blob"] + (["delta"] if with_delta else [])
     return (
@@ -189,15 +190,17 @@ def run_crawl(
     mft = _manifest(cfg) if resume else None
     if mft is not None and mft.get("stats", {}).get("stopped"):
         return crawl_log(spark, cfg)  # crawl already reached its natural stop
-    start = mft["round"] if mft is not None else None
-    if start is None:
+    if mft is None:
         cfg.io.makedirs(cfg.workdir)
         pending = spark.createDataFrame([], FRONTIER_SCHEMA)
         bstate = init_budget_state(budgets)
+        live = {"seen": [], "filters": []}
         rnd = 0
     else:
+        start = mft["round"]
         pending = spark.read.parquet(_p(cfg, "state", f"round={start}", "pending"))
         bstate = spark.read.parquet(_p(cfg, "state", f"round={start}", "budget"))
+        live = {k: mft[k] for k in ("seen", "filters")}
         rnd = start + 1
 
     while rnd < cfg.max_rounds:
@@ -208,7 +211,7 @@ def run_crawl(
             candidates = _derive_candidates(spark, cfg, rnd - 1)
 
         # 1. admission: the dedup gate on everything entering the frontier
-        seen = _read_seen(spark, cfg)
+        seen = _read_seen(spark, cfg, live["seen"])
         if cfg.dedup_mode == "exact":
             admitted, _ns = admit(candidates, seen)
             new_filters = None
@@ -222,7 +225,7 @@ def run_crawl(
                     f"filter_kind must be cuckoo|bloom, got {cfg.filter_kind!r}"
                 )
             admitted, _ns, new_filters = admit_filtered(
-                candidates, seen, _read_filters(spark, cfg),
+                candidates, seen, _read_filters(spark, cfg, live["filters"]),
                 n_parts=cfg.filter_parts, capacity_per_part=cfg.filter_capacity,
                 mode=cfg.dedup_mode, filter_cls=_fcls,
             )
@@ -324,6 +327,12 @@ def run_crawl(
                 fut.result()  # surface the first failure, after all joined
         t_state = time.monotonic() - t_st0
 
+        # the round's deltas join the live lists only at the flip
+        delta = f"delta={rnd}"
+        live = {
+            "seen": live["seen"] + ([delta] if cfg.dedup_mode != "cuckoo" else []),
+            "filters": live["filters"] + ([delta] if new_filters is not None else []),
+        }
         _commit_manifest(
             cfg, rnd,
             {
@@ -338,6 +347,7 @@ def run_crawl(
                 "log_secs": round(t_log, 3),
                 "state_secs": round(t_state, 3),
             },
+            live,
         )
         admitted.unpersist()
         from cola_spark.operators.dedup import release_persisted
@@ -358,17 +368,21 @@ def run_crawl(
 
 
 def crawl_log(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
-    """The global crawl-order artifact: total order (round, priority,
-    host, seq) with a global rank — computed two-phase (range partition
-    + per-partition rank + offsets), never a single-partition window."""
+    """The global crawl-order artifact over the committed rounds: total
+    order (round, priority, host, seq) with a global rank — computed
+    two-phase (range partition + per-partition rank + offsets), never a
+    single-partition window."""
     from cola_spark.operators.ranking import global_rank
 
-    if not cfg.io.list_dirs(_p(cfg, "log", "round=*")):
+    rnd = latest_round(cfg)
+    if rnd is None:
         schema = FRONTIER_SCHEMA + ", round int, host_rank int, image_id string, fetch_ok boolean"
         if cfg.decode:
             schema += ", fmt string, psnr double, invariant_ok boolean"
         return spark.createDataFrame([], schema + ", global_rank long")
-    log = spark.read.option("basePath", _p(cfg, "log")).parquet(_p(cfg, "log", "round=*"))
+    log = spark.read.option("basePath", _p(cfg, "log")).parquet(
+        *[_p(cfg, "log", f"round={r}") for r in range(rnd + 1)]
+    )
     # eager_release: crawl_log is a one-shot artifact call (end of
     # run_crawl, gate, bench) — don't leave the ranged frame pinned
     return global_rank(log, ["round", "priority", "host", "seq"], eager_release=True)
@@ -376,9 +390,10 @@ def crawl_log(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
 
 def final_state(spark: SparkSession, cfg: CrawlConfig):
     """(pending, seen, budget_state) at the last committed round."""
-    rnd = latest_round(cfg)
+    m = _manifest(cfg)
+    rnd = m["round"]
     return (
         spark.read.parquet(_p(cfg, "state", f"round={rnd}", "pending")),
-        _read_seen(spark, cfg),
+        _read_seen(spark, cfg, m["seen"]),
         spark.read.parquet(_p(cfg, "state", f"round={rnd}", "budget")),
     )

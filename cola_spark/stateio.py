@@ -1,11 +1,11 @@
 """Driver-side state IO seam — the adapter SURVEY §1.2 promises.
 
-The scheduler's per-round commit protocol (manifest read/atomic-write,
-delta-directory listing, compaction rename-commit, vacuum) is a small
-set of filesystem primitives. Inlining `os`/`glob`/`shutil` calls in
-the loop would hard-wire a driver-local POSIX filesystem — the first
-thing that breaks on a real cluster, where the workdir is an HDFS/S3
-path and the manifest commit becomes an Iceberg snapshot commit.
+The crawl's commit protocol (manifest read/atomic-write for each
+round and each compaction, removal of superseded directories, vacuum)
+is a small set of filesystem primitives. Inlining `os`/`glob`/`shutil`
+calls in the loop would hard-wire a driver-local POSIX filesystem — the
+first thing that breaks on a real cluster, where the workdir is an
+HDFS/S3 path and the manifest commit becomes an Iceberg snapshot commit.
 
 This module is that seam: `StateIO` is the minimal interface the
 scheduler and maintenance jobs need; `LocalStateIO` is the POSIX
@@ -20,10 +20,11 @@ any Hadoop-compatible URI, so the DataFrame side needs no adapter.
 
 Atomicity contract (what the crash-safety protocol relies on):
   * ``write_text_atomic`` — readers see the old or the new content,
-    never a torn write;
-  * ``rename`` — all-or-nothing publication of a prepared directory;
-  * ``remove_dir`` — only ever called on state a committed
-    manifest/compaction no longer references.
+    never a torn write. This is the only atomic operation: a manifest
+    write is the commit point, and a data directory (written by Spark)
+    is live only once a committed manifest names it;
+  * ``remove_dir`` — only ever called on state a committed manifest
+    no longer references, or that none ever did.
 """
 
 from __future__ import annotations
@@ -55,10 +56,6 @@ class StateIO:
 
     def remove_dir(self, path: str) -> None:
         """Remove a directory tree; missing paths are not an error."""
-        raise NotImplementedError
-
-    def rename(self, src: str, dst: str) -> None:
-        """Atomic rename-commit of a prepared directory."""
         raise NotImplementedError
 
     # ---- json convenience built on the primitives ----
@@ -96,9 +93,6 @@ class LocalStateIO(StateIO):
     def remove_dir(self, path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
-    def rename(self, src: str, dst: str) -> None:
-        os.replace(src, dst)
-
 
 class ObjectStoreStateIO(StateIO):
     """Object-store-shaped implementation over a local directory —
@@ -109,18 +103,11 @@ class ObjectStoreStateIO(StateIO):
       * no directories — ``makedirs`` is a no-op, keys imply their
         prefixes, PUT creates parents, and an "empty directory" does
         not exist (``exists`` on a childless directory is False);
-      * no atomic directory rename — ``rename`` is copy-objects +
-        delete-source, one object at a time. Each single-object copy
-        is atomic (a real PUT is), but the directory as a whole
-        appears INCREMENTALLY at the destination and the source
-        vanishes only afterwards. The commit protocols must therefore
-        tolerate a partially-copied destination: the compaction
-        rename-commit stays safe because a partial ``compacted=N`` is
-        a subset of data whose source deltas are still present
-        (superseded dirs are removed only after the copy completes,
-        and readers union + distinct), and the round manifest — a
-        single-object atomic PUT — remains the linearization point
-        for resume;
+      * no atomic directory rename — so nothing is published by
+        renaming a directory. A data directory appears object by
+        object, and readers ignore it until the manifest, a
+        single-object atomic PUT and the only linearization point,
+        names it;
       * listing is BY PREFIX — ``list_dirs`` walks every object under
         the pattern's fixed prefix and reconstructs the matching
         prefixes ("common prefixes" in S3 terms), instead of readdir
@@ -128,17 +115,15 @@ class ObjectStoreStateIO(StateIO):
 
     Used by the test suite to run the full scheduler resume +
     compaction protocol under object-store semantics; a real
-    deployment replaces the local walk/copy with the store's
+    deployment replaces the local walk with the store's
     LIST/GET/PUT/DELETE calls, keeping exactly this contract."""
 
     @staticmethod
     def _hidden_tmp(path: str) -> str:
         """In-flight intermediate name: dot-prefixed, so it is invisible
         to _objects_under (hence exists/list_dirs) AND to Spark's
-        parquet readers (which skip '.'/'_' files) — a crash mid-copy
-        must never leave a key that readers would take for data
-        (ADVICE r4: a visible truncated part-N.tmp broke the 'partial
-        destination is a readable subset' property)."""
+        parquet readers (which skip '.'/'_' files) — a crash mid-write
+        must never leave a key that readers would take for data."""
         d, b = os.path.split(path)
         return os.path.join(d, "." + b + ".tmp")
 
@@ -205,18 +190,6 @@ class ObjectStoreStateIO(StateIO):
             except FileNotFoundError:
                 pass
         shutil.rmtree(path, ignore_errors=True)  # tidy empty local scaffolding
-
-    def rename(self, src: str, dst: str) -> None:
-        src = src.rstrip(os.sep)
-        dst = dst.rstrip(os.sep)
-        for key in self._objects_under(src):
-            rel = os.path.relpath(key, src)
-            target = os.path.join(dst, rel) if rel != "." else dst
-            os.makedirs(os.path.dirname(target) or ".", exist_ok=True)
-            tmp = self._hidden_tmp(target)
-            shutil.copyfile(key, tmp)
-            os.replace(tmp, target)  # per-object atomic PUT
-        self.remove_dir(src)
 
 
 DEFAULT_IO = LocalStateIO()

@@ -2,18 +2,28 @@
 
 - kill after round r, resume → final crawl log identical to a straight
   run (snapshot-manifest semantics)
+- crash inside round r, before its manifest flip (at the flip itself,
+  or in the concurrent state-write barrier) → what the round left on
+  disk is invisible, and resume reproduces the straight run
 - hybrid cuckoo admission ≡ exact admission (filter only prunes)
 - pure cuckoo mode: bloom semantics (no false negatives: crawled set ⊆
   exact-mode crawled set; near-equal size at tiny FP rate)
 """
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from cola_spark.plans.scheduler import CrawlConfig, latest_round, run_crawl
 from cola_spark.sources import gen_budgets, gen_frontier_seeds, gen_images, gen_robots
+from cola_spark.stateio import LocalStateIO, ObjectStoreStateIO
 
 N, HOSTS, IMGS, PAGES, ROUNDS = 300, 10, 40, 20, 5
+HYBRID = {"dedup_mode": "hybrid", "filter_parts": 8, "filter_capacity": 1 << 12}
+CRASH_ROUND = 2
 
 
 @pytest.fixture(scope="module")
@@ -26,33 +36,109 @@ def inputs(spark):
     )
 
 
-def _run(spark, inputs, wd, **kw):
-    seeds, robots, budgets, images = inputs
-    cfg = CrawlConfig(
-        workdir=wd, n_images=IMGS, pages_per_host=PAGES, max_rounds=ROUNDS,
-        decode=False, **kw,
-    )
-    log = run_crawl(spark, seeds, robots, budgets, images, cfg)
+def _cfg(wd, **kw):
+    kw.setdefault("max_rounds", ROUNDS)
+    return CrawlConfig(workdir=wd, n_images=IMGS, pages_per_host=PAGES, decode=False, **kw)
+
+
+def _rows(log):
     return [
         (r.round, r.priority, r.host, r.seq, r.url_canon, r.host_rank, r.fetch_ok)
         for r in log.orderBy("global_rank").collect()
-    ], cfg
+    ]
 
 
-def test_resume_reproduces_full_run(spark, inputs, tmp_path_factory):
-    full, _ = _run(spark, inputs, str(tmp_path_factory.mktemp("full")))
+def _run(spark, inputs, wd, **kw):
+    cfg = _cfg(wd, **kw)
+    return _rows(run_crawl(spark, *inputs, cfg)), cfg
+
+
+@pytest.fixture(scope="module")
+def exact_ref(spark, inputs, tmp_path_factory):
+    """The straight exact-mode run: (rows, its finished workdir)."""
+    rows, cfg = _run(spark, inputs, str(tmp_path_factory.mktemp("exact")))
+    return rows, cfg.workdir
+
+
+@pytest.fixture(scope="module")
+def hybrid_ref(spark, inputs, tmp_path_factory):
+    return _run(spark, inputs, str(tmp_path_factory.mktemp("hybrid")), **HYBRID)[0]
+
+
+def test_resume_reproduces_full_run(spark, inputs, exact_ref, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("interrupted"))
-    seeds, robots, budgets, images = inputs
-    cfg = CrawlConfig(workdir=wd, n_images=IMGS, pages_per_host=PAGES, max_rounds=2, decode=False)
-    run_crawl(spark, seeds, robots, budgets, images, cfg)
+    cfg = _cfg(wd, max_rounds=2)
+    run_crawl(spark, *inputs, cfg)
     assert latest_round(cfg) == 1
     cfg.max_rounds = ROUNDS
-    log = run_crawl(spark, seeds, robots, budgets, images, cfg, resume=True)
-    resumed = [
-        (r.round, r.priority, r.host, r.seq, r.url_canon, r.host_rank, r.fetch_ok)
-        for r in log.orderBy("global_rank").collect()
-    ]
-    assert resumed == full
+    log = run_crawl(spark, *inputs, cfg, resume=True)
+    assert _rows(log) == exact_ref[0]
+
+
+def test_fresh_crawl_in_used_workdir_starts_empty(spark, inputs, exact_ref):
+    """resume=False over a finished crawl's workdir must not dedup its
+    seeds against the previous crawl's seen set."""
+    rows, wd = exact_ref
+    assert _run(spark, inputs, wd)[0] == rows
+
+
+class InjectedCrash(RuntimeError):
+    pass
+
+
+def _crash_at_flip(io_cls):
+    """An ``io_cls`` store whose write of round CRASH_ROUND's manifest
+    raises: every output of the round is on disk, its commit is not."""
+
+    class CrashAtFlip(io_cls):
+        def write_text_atomic(self, path, data):
+            if os.path.basename(path) == "manifest.json" and json.loads(data)["round"] == CRASH_ROUND:
+                raise InjectedCrash(path)
+            super().write_text_atomic(path, data)
+
+    return CrashAtFlip()
+
+
+def _crash_in_barrier(monkeypatch):
+    """Fail round CRASH_ROUND's budget write; the other concurrent state
+    writes (seen and filter deltas, pending) still land."""
+    parquet = DataFrameWriter.parquet
+    target = os.path.join("state", f"round={CRASH_ROUND}", "budget")
+
+    def failing(self, path, *args, **kwargs):
+        if path.endswith(target):
+            raise InjectedCrash(path)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+
+
+@pytest.mark.parametrize("crash", ["flip", "barrier"])
+@pytest.mark.parametrize(
+    "mode,io_cls",
+    [("exact", LocalStateIO), ("hybrid", LocalStateIO), ("exact", ObjectStoreStateIO)],
+    ids=["exact-local", "hybrid-local", "exact-objectstore"],
+)
+def test_resume_after_crash_before_flip(
+    spark, inputs, exact_ref, hybrid_ref, tmp_path, monkeypatch, crash, mode, io_cls
+):
+    """A crash after round 2's seen/filter deltas landed but before its
+    manifest flip leaves orphan deltas; resume must not dedup against
+    them and must reproduce the straight run row for row."""
+    kw = HYBRID if mode == "hybrid" else {}
+    cfg = _cfg(str(tmp_path / "wd"), io=io_cls(), **kw)
+    if crash == "flip":
+        cfg.io = _crash_at_flip(io_cls)
+    else:
+        _crash_in_barrier(monkeypatch)
+    with pytest.raises(InjectedCrash):
+        run_crawl(spark, *inputs, cfg)
+    monkeypatch.undo()
+    cfg.io = io_cls()
+    assert latest_round(cfg) == CRASH_ROUND - 1
+    assert os.path.isdir(os.path.join(cfg.workdir, "seen", f"delta={CRASH_ROUND}"))
+    log = run_crawl(spark, *inputs, cfg, resume=True)
+    assert _rows(log) == (hybrid_ref if mode == "hybrid" else exact_ref[0])
 
 
 def test_natural_stop_commits_final_admissions(spark, tmp_path_factory):
@@ -64,7 +150,7 @@ def test_natural_stop_commits_final_admissions(spark, tmp_path_factory):
 
     from cola_spark.functions.urls import url_hash_col
     from cola_spark.plans.oracle import run_oracle
-    from cola_spark.plans.scheduler import _read_seen, latest_round
+    from cola_spark.plans.scheduler import final_state, latest_round
 
     seeds = gen_frontier_seeds(spark, 40, n_hosts=4, pages_per_host=6)
     robots, budgets = gen_robots(spark, 4), gen_budgets(spark, 4)
@@ -88,7 +174,7 @@ def test_natural_stop_commits_final_admissions(spark, tmp_path_factory):
         .select(url_hash_col(F.col("c")).alias("h"))
         .collect()
     }
-    got = {r.url_hash for r in _read_seen(spark, cfg).collect()}
+    got = {r.url_hash for r in final_state(spark, cfg)[1].collect()}
     assert got == want, "stop round's admissions missing from seen"
     # resume after natural stop: no new rounds, identical log
     before = [(r.round, r.seq) for r in log.orderBy("global_rank").collect()]
@@ -115,23 +201,17 @@ def test_stop_at_round_zero_is_resumable(spark, tmp_path_factory):
     assert log2.count() == 0
 
 
-def test_hybrid_mode_identical_to_exact(spark, inputs, tmp_path_factory):
-    exact, _ = _run(spark, inputs, str(tmp_path_factory.mktemp("exact")))
-    hybrid, _ = _run(
-        spark, inputs, str(tmp_path_factory.mktemp("hybrid")),
-        dedup_mode="hybrid", filter_parts=8, filter_capacity=1 << 12,
-    )
-    assert hybrid == exact
+def test_hybrid_mode_identical_to_exact(exact_ref, hybrid_ref):
+    assert hybrid_ref == exact_ref[0]
 
 
-def test_cuckoo_mode_bloom_semantics(spark, inputs, tmp_path_factory):
-    exact, _ = _run(spark, inputs, str(tmp_path_factory.mktemp("exact2")))
+def test_cuckoo_mode_bloom_semantics(spark, inputs, exact_ref, tmp_path_factory):
     cuckoo, _ = _run(
         spark, inputs, str(tmp_path_factory.mktemp("cuckoo")),
         dedup_mode="cuckoo", filter_parts=8, filter_capacity=1 << 12,
     )
     # never re-admits a seen URL → crawled set can only shrink vs exact
-    exact_urls = {t[4] for t in exact}
+    exact_urls = {t[4] for t in exact_ref[0]}
     cuckoo_urls = {t[4] for t in cuckoo}
     assert cuckoo_urls <= exact_urls
     # at 16-bit fingerprints the FP rate is ~1e-4: expect (near-)equality
@@ -160,24 +240,14 @@ def test_fused_fetch_mode_same_schedule_and_payload(spark, inputs, tmp_path_fact
     assert logs["fused"] == logs["join"]
 
 
-def test_resume_reproduces_full_run_on_objectstore(spark, inputs, tmp_path_factory):
+def test_resume_reproduces_full_run_on_objectstore(spark, inputs, exact_ref, tmp_path_factory):
     """The resume contract under object-store StateIO semantics (no-op
-    makedirs, prefix listing, copy+delete rename): identical final log
-    to the POSIX-backend straight run."""
-    from cola_spark.stateio import ObjectStoreStateIO
-
-    full, _ = _run(spark, inputs, str(tmp_path_factory.mktemp("os_full")),
-                   io=ObjectStoreStateIO())
-    wd = str(tmp_path_factory.mktemp("os_interrupted"))
-    seeds, robots, budgets, images = inputs
-    cfg = CrawlConfig(workdir=wd, n_images=IMGS, pages_per_host=PAGES,
-                      max_rounds=2, decode=False, io=ObjectStoreStateIO())
-    run_crawl(spark, seeds, robots, budgets, images, cfg)
+    makedirs, prefix listing): identical final log to the POSIX-backend
+    straight run."""
+    cfg = _cfg(str(tmp_path_factory.mktemp("os_interrupted")), max_rounds=2,
+               io=ObjectStoreStateIO())
+    run_crawl(spark, *inputs, cfg)
     assert latest_round(cfg) == 1
     cfg.max_rounds = ROUNDS
-    log = run_crawl(spark, seeds, robots, budgets, images, cfg, resume=True)
-    resumed = [
-        (r.round, r.priority, r.host, r.seq, r.url_canon, r.host_rank, r.fetch_ok)
-        for r in log.orderBy("global_rank").collect()
-    ]
-    assert resumed == full
+    log = run_crawl(spark, *inputs, cfg, resume=True)
+    assert _rows(log) == exact_ref[0]

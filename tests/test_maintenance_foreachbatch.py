@@ -48,38 +48,72 @@ def test_compaction_preserves_state_and_resume(spark, tmp_path):
     assert a == b
 
 
-def test_compaction_crash_window_leaves_superset(spark, tmp_path):
-    """Crash-safety: at every point between the compaction commit and
-    the removals, readers must see a (harmless) superset — never an
-    empty seen set that would re-admit the whole crawl."""
-    from cola_spark.plans.scheduler import _read_seen
+def test_compaction_crash_before_flip_reads_committed_set(spark, tmp_path):
+    """Crash-safety: compaction commits by flipping the manifest. A crash
+    after the snapshot write but before the flip leaves an orphan
+    ``compacted=<k>`` that readers ignore; the next compaction overwrites
+    it and folds everything."""
+    from cola_spark.plans.scheduler import _manifest
+    from cola_spark.stateio import LocalStateIO
+
+    class CrashAtFlip(LocalStateIO):
+        def write_text_atomic(self, path, data):
+            if os.path.basename(path) == "manifest.json":
+                raise RuntimeError("crash before the manifest flip")
+            super().write_text_atomic(path, data)
 
     wd = str(tmp_path / "cw")
     seeds = gen_frontier_seeds(spark, 200, n_hosts=6, pages_per_host=15)
     robots, budgets, images = gen_robots(spark, 6), gen_budgets(spark, 6), gen_images(spark, 20)
     cfg = CrawlConfig(workdir=wd, n_images=20, pages_per_host=15, max_rounds=3, decode=False)
     run_crawl(spark, seeds, robots, budgets, images, cfg)
-    before = {r.url_hash for r in _read_seen(spark, cfg).collect()}
-    assert before
+    live = _manifest(cfg)["seen"]
+    before = sorted(r.url_hash for r in final_state(spark, cfg)[1].collect())
+    assert before and len(live) >= 2
 
-    # simulate the crash: run only the write+commit, skip the removals
-    from cola_spark.plans import maintenance as mnt
+    cfg.io = CrashAtFlip()
+    with pytest.raises(RuntimeError, match="flip"):
+        compact_seen(spark, cfg)
+    cfg.io = LocalStateIO()
+    # crash here — the orphan snapshot AND the live deltas are on disk
+    assert glob.glob(f"{wd}/seen/compacted=*") == [f"{wd}/seen/compacted=0"]
+    assert _manifest(cfg)["seen"] == live
+    mid = sorted(r.url_hash for r in final_state(spark, cfg)[1].collect())
+    assert mid == before  # exactly the committed rows, not a superset
 
-    deltas, compacted, nxt = mnt._state_dirs(cfg, "seen")
-    folded = _read_seen(spark, cfg).distinct().repartition(4, F.pmod(F.col("url_hash"), F.lit(4)))
-    tmp = f"{wd}/seen/_compact_tmp"
-    folded.write.mode("overwrite").parquet(tmp)
-    os.replace(tmp, f"{wd}/seen/compacted={nxt}")
-    # crash here — old deltas AND the compacted dir both present
-    mid = {r.url_hash for r in _read_seen(spark, cfg).collect()}
-    assert mid == before  # superset of hashes, identical as a set
-
-    # recovery: the next compaction folds everything and cleans up
-    assert compact_seen(spark, cfg) == len(deltas) + 1
-    after = {r.url_hash for r in _read_seen(spark, cfg).collect()}
+    # recovery: the next compaction overwrites the orphan and folds all
+    assert compact_seen(spark, cfg) == len(live)
+    assert _manifest(cfg)["seen"] == ["compacted=0"]
+    after = sorted(r.url_hash for r in final_state(spark, cfg)[1].collect())
     assert after == before
     assert len(glob.glob(f"{wd}/seen/delta=*")) == 0
     assert len(glob.glob(f"{wd}/seen/compacted=*")) == 1
+
+
+def test_vacuum_keeps_committed_round_over_orphan(spark, tmp_path):
+    """A crash after round r+1's state writes leaves state/round=r+1
+    behind; vacuum keeps what the manifest commits (round r), so the
+    crawl still resumes. keep_last < 1 would drop the committed round."""
+    import shutil
+
+    from cola_spark.plans.scheduler import latest_round
+
+    cfg = CrawlConfig(workdir=str(tmp_path / "v"), n_images=20, pages_per_host=10,
+                      max_rounds=2, decode=False)
+    seeds = gen_frontier_seeds(spark, 60, n_hosts=4, pages_per_host=10)
+    robots, budgets, images = gen_robots(spark, 4), gen_budgets(spark, 4), gen_images(spark, 20)
+    run_crawl(spark, seeds, robots, budgets, images, cfg)
+    assert latest_round(cfg) == 1
+    state = f"{cfg.workdir}/state"
+    shutil.copytree(f"{state}/round=1", f"{state}/round=2")  # the orphan
+
+    assert vacuum_old_state(cfg, keep_last=1) == 1
+    assert sorted(os.listdir(state)) == ["round=1", "round=2"]
+    with pytest.raises(ValueError, match="keep_last"):
+        vacuum_old_state(cfg, keep_last=0)
+    cfg.max_rounds = 3
+    run_crawl(spark, seeds, robots, budgets, images, cfg, resume=True)
+    assert latest_round(cfg) == 2
 
 
 def test_foreach_batch_pending_carryover(spark, tmp_path):

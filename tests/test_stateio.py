@@ -47,10 +47,6 @@ class RecordingStateIO(LocalStateIO):
         self._rec("remove_dir", path)
         return super().remove_dir(path)
 
-    def rename(self, src, dst):
-        self._rec("rename", src, dst)
-        return super().rename(src, dst)
-
 
 class InMemoryStateIO(StateIO):
     """A purely in-memory text/metadata store — no POSIX at all. Only
@@ -79,10 +75,6 @@ class InMemoryStateIO(StateIO):
         for p in [p for p in self.files if p.startswith(path)]:
             del self.files[p]
 
-    def rename(self, src, dst):
-        for p in [p for p in self.files if p.startswith(src)]:
-            self.files[p.replace(src, dst, 1)] = self.files.pop(p)
-
 
 def test_manifest_protocol_runs_on_pure_inmemory_store():
     """Manifest commit/read/latest_round against a store with no POSIX
@@ -97,11 +89,14 @@ def test_manifest_protocol_runs_on_pure_inmemory_store():
     io = InMemoryStateIO()
     cfg = CrawlConfig(workdir="mem://crawl/job1", io=io)
     assert _manifest(cfg) is None and latest_round(cfg) is None
-    _commit_manifest(cfg, 0, {"round": 0, "scheduled": 10, "stopped": False})
-    _commit_manifest(cfg, 1, {"round": 1, "scheduled": 4, "stopped": True})
+    _commit_manifest(cfg, 0, {"round": 0, "scheduled": 10, "stopped": False},
+                     {"seen": ["delta=0"], "filters": []})
+    _commit_manifest(cfg, 1, {"round": 1, "scheduled": 4, "stopped": True},
+                     {"seen": ["delta=0", "delta=1"], "filters": []})
     assert latest_round(cfg) == 1
     m = _manifest(cfg)
     assert m["stats"]["stopped"] is True
+    assert m["seen"] == ["delta=0", "delta=1"] and m["filters"] == []
     assert [h["round"] for h in m["history"]] == [0, 1]
     # nothing escaped to the real filesystem
     assert not os.path.exists("mem:")
@@ -133,7 +128,7 @@ def test_crawl_and_maintenance_route_all_fs_ops_through_seam(spark, tmp_path):
 
     ops = {c[0] for c in io.calls}
     assert {"exists", "makedirs", "read_text", "write_text_atomic",
-            "list_dirs", "remove_dir", "rename"} <= ops
+            "list_dirs", "remove_dir"} <= ops
     # resume through the seam: re-invoking returns the committed log
     log2 = run_crawl(spark, seeds, robots, budgets, gen_images(spark, 30), cfg,
                      resume=True)
@@ -145,8 +140,7 @@ def test_crawl_and_maintenance_route_all_fs_ops_through_seam(spark, tmp_path):
 
 def test_objectstore_contracts(tmp_path):
     """The S3-shaped semantics themselves: no empty directories, PUT
-    creates prefixes, prefix listing, copy+delete rename that leaves a
-    complete destination and no source."""
+    creates prefixes, prefix listing, delete by prefix."""
     from cola_spark.stateio import ObjectStoreStateIO
 
     io = ObjectStoreStateIO()
@@ -164,20 +158,15 @@ def test_objectstore_contracts(tmp_path):
     assert io.list_dirs(f"{root}/seen/delta=*") == [
         f"{root}/seen/delta=0", f"{root}/seen/delta=1",
     ]
-    # rename = copy objects + delete source
-    io.rename(f"{root}/seen/delta=1", f"{root}/seen/compacted=0")
-    assert io.read_text(f"{root}/seen/compacted=0/part-0") == "y"
-    assert not io.exists(f"{root}/seen/delta=1")
-    assert io.list_dirs(f"{root}/seen/compacted=*") == [f"{root}/seen/compacted=0"]
     # remove_dir deletes by prefix; missing paths are not an error
     io.remove_dir(f"{root}/seen/delta=0")
     io.remove_dir(f"{root}/never/existed")
-    assert io.list_dirs(f"{root}/seen/delta=*") == []
+    assert io.list_dirs(f"{root}/seen/delta=*") == [f"{root}/seen/delta=1"]
 
 
 def test_objectstore_inflight_intermediates_invisible(tmp_path):
-    """ADVICE r4: a crash mid-copy must not leave a key readers treat
-    as data. In-flight intermediates are dot-prefixed, so a leftover is
+    """A crash mid-write must not leave a key readers treat as data.
+    In-flight intermediates are dot-prefixed, so a leftover is
     invisible to exists/list_dirs/_objects_under (and to Spark parquet
     readers, which skip '.' files); remove_dir still sweeps it."""
     import os as _os
@@ -189,16 +178,15 @@ def test_objectstore_inflight_intermediates_invisible(tmp_path):
     # simulate a crash: a truncated hidden intermediate is the ONLY key
     crash_dir = f"{root}/seen/compacted=0"
     _os.makedirs(crash_dir)
-    leftover = io._hidden_tmp(f"{crash_dir}/part-0")
+    leftover = io._hidden_tmp(f"{crash_dir}/part-1")
     with open(leftover, "w") as f:
         f.write("trunc")
     assert not io.exists(crash_dir), "hidden tmp must not make the dir exist"
     assert io.list_dirs(f"{root}/seen/compacted=*") == []
     assert io._objects_under(crash_dir) == []
-    # a later rename over the same destination succeeds and the
-    # destination holds exactly the real objects
-    io.write_text_atomic(f"{root}/seen/delta=0/part-0", "good")
-    io.rename(f"{root}/seen/delta=0", crash_dir)
+    # a later write beside it succeeds through its own hidden tmp, and
+    # the directory holds exactly the real objects
+    io.write_text_atomic(f"{crash_dir}/part-0", "good")
     assert io.read_text(f"{crash_dir}/part-0") == "good"
     assert io._objects_under(crash_dir) == [f"{crash_dir}/part-0"]
     # cleanup sweeps the orphan too
@@ -209,9 +197,8 @@ def test_objectstore_inflight_intermediates_invisible(tmp_path):
 def test_crawl_resume_and_compaction_on_objectstore(spark, tmp_path):
     """The full scheduler protocol under object-store semantics: run →
     kill → resume reproduces the straight run's log; compaction's
-    copy+delete rename-commit folds the seen deltas; vacuum leaves the
-    resumable tail — all with no-op makedirs, prefix-only listing, and
-    non-atomic directory rename."""
+    manifest flip folds the seen deltas; vacuum leaves the resumable
+    tail — all with no-op makedirs and prefix-only listing."""
     from cola_spark.plans.maintenance import compact_seen, vacuum_old_state
     from cola_spark.plans.scheduler import CrawlConfig, latest_round, run_crawl
     from cola_spark.sources import gen_budgets, gen_frontier_seeds, gen_images, gen_robots
