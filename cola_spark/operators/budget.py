@@ -96,21 +96,6 @@ def update_budget_state_outcomes(state: DataFrame, outcomes: DataFrame) -> DataF
     )
 
 
-def update_budget_state(
-    state: DataFrame,
-    granted: DataFrame,   # (host, n_granted)
-    finished: DataFrame,  # (host, n_finished)
-    errored: DataFrame,   # (host, n_errored)
-) -> DataFrame:
-    """Three-table variant (kept for callers that already hold separate
-    counts); delegates to the single-outcomes join."""
-    outcomes = (
-        granted.join(finished, "host", "full").join(errored, "host", "full")
-        .na.fill({"n_granted": 0, "n_finished": 0, "n_errored": 0})
-    )
-    return update_budget_state_outcomes(state, outcomes)
-
-
 def all_finished(state: DataFrame) -> bool:
     """cola's ALLFINISHED: every host's finished >= budget."""
     row = state.agg(

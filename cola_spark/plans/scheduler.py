@@ -7,9 +7,13 @@ Reference lifecycle (cola/job/executor.py ~L60-260, cola/job/container.py):
         counter.inc; budget.finish/error; requeue on error
   until ALLFINISHED or frontier empty.
 
-Here one loop iteration is one *round*: every stage is a DataFrame
-transformation. Per-round driver work is five write actions and one
-observation read — the analogue of cola's two RPCs:
+Here one loop iteration is one *round* (``crawl_round``): every stage
+is a DataFrame transformation. One round body, two drivers:
+``run_crawl`` loops it over seeds and the children/retries of the
+previous round until the frontier runs dry, and the foreachBatch
+crawler (streaming/foreach_batch.py) runs it once per micro-batch,
+with ``round = batch_id``. Per-round driver work is five write actions
+and one observation read — the analogue of cola's two RPCs:
 
   1. log/round=r      — the fused big job: admission (dedup) → robots →
                         salted priority/budget cut → fetch → decode,
@@ -17,7 +21,8 @@ observation read — the analogue of cola's two RPCs:
                         separate count() jobs)
   2. seen/delta=r     — append-only new-hash delta (never rewrites the
                         accumulated seen set — at the 10^10-URL design
-                        point a per-round rewrite would be the bottleneck)
+                        point a per-round rewrite would be the bottleneck),
+                        sized by the round's rows, not by seen_parts
   3. filters/delta=r  — changed cuckoo-filter blobs only (latest blob
                         per part wins on read)
   4. state/round=r/pending — unscheduled frontier carry-over
@@ -32,7 +37,9 @@ Commit protocol: ``manifest.json`` is the single commit point
 the live ``seen`` and ``filters`` directories, and readers read only
 those and rounds ``0..round`` — never a listing. What a crashed round
 left on disk stays invisible until the resumed round overwrites it.
-Compaction (maintenance.py) commits through the same manifest.
+Compaction (maintenance.py) commits through the same manifest. A
+round overwrites its outputs before it flips, so a resume and an
+at-least-once micro-batch replay are safe for the same reason.
 
 Determinism contract (the BASELINE order-match criterion): the global
 crawl order is the total order (round, priority, host, seq). Nothing
@@ -59,11 +66,7 @@ from pyspark.sql import functions as F
 
 from cola_spark.stateio import DEFAULT_IO, StateIO
 
-from cola_spark.operators.budget import (
-    budget_caps,
-    init_budget_state,
-    update_budget_state,
-)
+from cola_spark.operators.budget import budget_caps, init_budget_state
 from cola_spark.operators.dedup import (
     FRONTIER_COLS,
     admit,
@@ -172,6 +175,211 @@ def _derive_candidates(spark: SparkSession, cfg: CrawlConfig, prev_round: int) -
     return children.unionByName(requeue)
 
 
+@dataclass
+class RoundState:
+    """What a round reads of the last committed round: the carried-over
+    frontier, the budget ledger and the live seen/filters dirs."""
+
+    pending: DataFrame
+    budget: DataFrame
+    live: dict
+
+
+def _read_state(spark: SparkSession, cfg: CrawlConfig, rnd: int, live: dict) -> RoundState:
+    return RoundState(
+        spark.read.parquet(_p(cfg, "state", f"round={rnd}", "pending")),
+        spark.read.parquet(_p(cfg, "state", f"round={rnd}", "budget")),
+        live,
+    )
+
+
+def _start_state(
+    spark: SparkSession, cfg: CrawlConfig, budgets: DataFrame, m: dict | None
+) -> RoundState:
+    """The state the round after manifest ``m`` starts from; a fresh
+    crawl's (empty frontier, unspent ledger) when ``m`` is None."""
+    if m is None:
+        cfg.io.makedirs(cfg.workdir)
+        return RoundState(
+            spark.createDataFrame([], FRONTIER_SCHEMA),
+            init_budget_state(budgets),
+            {"seen": [], "filters": []},
+        )
+    return _read_state(spark, cfg, m["round"], {k: m[k] for k in ("seen", "filters")})
+
+
+def crawl_round(
+    spark: SparkSession,
+    cfg: CrawlConfig,
+    rnd: int,
+    candidates: DataFrame,
+    state: RoundState,
+    robots: DataFrame,
+    images: DataFrame,
+) -> RoundState | None:
+    """Round ``rnd`` over ``candidates``: admission → robots → cut →
+    fetch → log write → concurrent state barrier → manifest flip.
+
+    Every output is written in overwrite mode under the round's own
+    name and the flip is the round's commit, so re-running a round
+    whose flip did not happen (a resume, a replayed micro-batch) is
+    safe. Returns the state round ``rnd + 1`` starts from, or None when
+    the round scheduled nothing (the crawl's natural stop)."""
+    if cfg.dedup_mode not in ("exact", "hybrid", "cuckoo"):
+        raise ValueError(
+            f"dedup_mode must be exact|hybrid|cuckoo, got {cfg.dedup_mode!r}"
+        )
+    t0 = time.monotonic()
+    # 1. admission: the dedup gate on everything entering the frontier
+    seen = _read_seen(spark, cfg, state.live["seen"])
+    if cfg.dedup_mode == "exact":
+        admitted, _ns = admit(candidates, seen)
+        new_filters = None
+    else:
+        if cfg.filter_kind == "bloom":
+            from cola_spark.filters.bloom import BloomFilter as _fcls
+        elif cfg.filter_kind == "cuckoo":
+            _fcls = None  # admit_filtered defaults to CuckooFilter
+        else:
+            raise ValueError(
+                f"filter_kind must be cuckoo|bloom, got {cfg.filter_kind!r}"
+            )
+        admitted, _ns, new_filters = admit_filtered(
+            candidates, seen, _read_filters(spark, cfg, state.live["filters"]),
+            n_parts=cfg.filter_parts, capacity_per_part=cfg.filter_capacity,
+            mode=cfg.dedup_mode, filter_cls=_fcls,
+        )
+    admitted = admitted.persist()
+    # identical to the admit()-returned new-hash set, but derived
+    # from the persisted admitted so step 4 doesn't recompute admission
+    new_seen = admitted.filter(~F.col("force")).select("url_hash")
+
+    # 2-3. robots gate + this round's cut + fetch, fused into one job
+    pending_next = state.pending.unionByName(
+        robots_gate(admitted, robots, broadcast=cfg.broadcast_caps)
+    )
+    caps = budget_caps(state.budget, cfg.adaptive)
+    scheduled = apply_global_cap(
+        schedule_cut(
+            pending_next, caps,
+            cfg.salt_buckets, broadcast_caps=cfg.broadcast_caps,
+        ),
+        cfg.global_cap,
+    )
+    if cfg.decode and cfg.fetch_mode == "fused":
+        from cola_spark.operators.fetch import fetch_decode_verify, fused_parts
+
+        # exact upper bound on this round's scheduled rows: the
+        # ledger's cap sum (tiny agg on the broadcast-size budget
+        # state), further clamped by the global cap — sizes the
+        # Python stage instead of a fixed partition constant
+        bound = caps.agg(F.sum("cap")).first()[0] or 0
+        if cfg.global_cap is not None:
+            bound = min(int(bound), cfg.global_cap)
+        fetched = fetch_decode_verify(
+            scheduled, cfg.n_images,
+            parts=fused_parts(int(bound), spark.sparkContext.defaultParallelism),
+            carry_all=True,
+        )
+    else:
+        fetched = synthetic_fetch(scheduled, images, cfg.n_images, decode=cfg.decode)
+    obs = Observation(f"round_{rnd}")
+    fetched = fetched.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_scheduled"),
+        F.sum(F.col("fetch_ok").cast("long")).alias("n_ok"),
+    )
+    log_cols = ["round", *FRONTIER_COLS, "host_rank", "image_id", "fetch_ok"]
+    if cfg.decode:
+        log_cols += ["fmt", "psnr", "invariant_ok"]
+    t_log0 = time.monotonic()
+    fetched.withColumn("round", F.lit(rnd)).select(*log_cols).write.mode(
+        "overwrite"
+    ).parquet(_p(cfg, "log", f"round={rnd}"))
+    t_log = time.monotonic() - t_log0
+    n_scheduled = obs.get["n_scheduled"]
+    stopped = n_scheduled == 0
+
+    # 4+5. persist dedup deltas + carry-over frontier + ledger.
+    # The four state writes are independent given the materialized
+    # log, so they run CONCURRENTLY (separate driver threads →
+    # separate Spark jobs): the per-round commit barrier costs
+    # max(write) instead of sum(write) — this is what made
+    # crawl_5rounds anti-scale 8→32 at sandbox SF. Seen deltas are
+    # written ALSO on natural stop: the oracle adds admissions to
+    # seen during admission, *before* its stop check — a stop round
+    # can admit (robots-blocked / over-cap) rows that must still be
+    # remembered, or a resume would re-admit them.
+    from concurrent.futures import ThreadPoolExecutor
+
+    log_r = spark.read.parquet(_p(cfg, "log", f"round={rnd}"))
+    from cola_spark.operators.budget import round_outcomes, update_budget_state_outcomes
+
+    bstate = update_budget_state_outcomes(state.budget, round_outcomes(log_r))
+    writes = []
+    if cfg.dedup_mode != "cuckoo":
+        # no fixed repartition: a delta holds one round's new hashes,
+        # and every reader (the anti-join, the hybrid suspect check)
+        # shuffles seen anyway; compaction restores seen_parts
+        writes.append(
+            lambda: new_seen.write.mode("overwrite").parquet(_p(cfg, "seen", f"delta={rnd}"))
+        )
+    if new_filters is not None:
+        writes.append(
+            lambda: new_filters.withColumn("delta", F.lit(rnd))
+            .write.mode("overwrite")
+            .parquet(_p(cfg, "filters", f"delta={rnd}"))
+        )
+    writes.append(
+        lambda: pending_next.join(log_r.select("seq"), "seq", "left_anti")
+        .write.mode("overwrite")
+        .parquet(_p(cfg, "state", f"round={rnd}", "pending"))
+    )
+    writes.append(
+        lambda: bstate.write.mode("overwrite").parquet(
+            _p(cfg, "state", f"round={rnd}", "budget")
+        )
+    )
+    t_st0 = time.monotonic()
+    with ThreadPoolExecutor(max_workers=len(writes)) as ex:
+        for fut in [ex.submit(w) for w in writes]:
+            fut.result()  # surface the first failure, after all joined
+    t_state = time.monotonic() - t_st0
+
+    # the round's deltas join the live lists only at the flip
+    delta = f"delta={rnd}"
+    live = {
+        "seen": state.live["seen"] + ([delta] if cfg.dedup_mode != "cuckoo" else []),
+        "filters": state.live["filters"] + ([delta] if new_filters is not None else []),
+    }
+    _commit_manifest(
+        cfg, rnd,
+        {
+            "round": rnd,
+            "scheduled": int(n_scheduled),
+            "fetched_ok": int(obs.get["n_ok"] or 0),
+            "stopped": stopped,
+            "secs": round(time.monotonic() - t0, 3),
+            # per-round stage metrics: the fused log job vs the
+            # concurrent state-commit barrier (the rest is admission
+            # planning + driver bookkeeping)
+            "log_secs": round(t_log, 3),
+            "state_secs": round(t_state, 3),
+        },
+        live,
+    )
+    admitted.unpersist()
+    from cola_spark.operators.dedup import release_persisted
+    from cola_spark.operators.ranking import release_persisted as release_ranked
+
+    release_persisted()
+    release_ranked()  # per-round global-cap rank caches
+    # the stop round is a fully committed round (log/seen/state all
+    # written, manifest points at rnd >= 0) — a resume reads the flag
+    # and returns instead of replaying empty rounds
+    return None if stopped else _read_state(spark, cfg, rnd, live)
+
+
 def run_crawl(
     spark: SparkSession,
     seeds: DataFrame,
@@ -183,187 +391,18 @@ def run_crawl(
 ) -> DataFrame:
     """Run the crawl to completion; returns the crawl log (one row per
     scheduled fetch)."""
-    if cfg.dedup_mode not in ("exact", "hybrid", "cuckoo"):
-        raise ValueError(
-            f"dedup_mode must be exact|hybrid|cuckoo, got {cfg.dedup_mode!r}"
-        )
     mft = _manifest(cfg) if resume else None
     if mft is not None and mft.get("stats", {}).get("stopped"):
         return crawl_log(spark, cfg)  # crawl already reached its natural stop
-    if mft is None:
-        cfg.io.makedirs(cfg.workdir)
-        pending = spark.createDataFrame([], FRONTIER_SCHEMA)
-        bstate = init_budget_state(budgets)
-        live = {"seen": [], "filters": []}
-        rnd = 0
-    else:
-        start = mft["round"]
-        pending = spark.read.parquet(_p(cfg, "state", f"round={start}", "pending"))
-        bstate = spark.read.parquet(_p(cfg, "state", f"round={start}", "budget"))
-        live = {k: mft[k] for k in ("seen", "filters")}
-        rnd = start + 1
-
-    while rnd < cfg.max_rounds:
-        t0 = time.monotonic()
+    state = _start_state(spark, cfg, budgets, mft)
+    rnd = 0 if mft is None else mft["round"] + 1
+    while state is not None and rnd < cfg.max_rounds:
         if rnd == 0:
             candidates = prepare_frontier(seeds.select("url", "priority", "seq", "force"))
         else:
             candidates = _derive_candidates(spark, cfg, rnd - 1)
-
-        # 1. admission: the dedup gate on everything entering the frontier
-        seen = _read_seen(spark, cfg, live["seen"])
-        if cfg.dedup_mode == "exact":
-            admitted, _ns = admit(candidates, seen)
-            new_filters = None
-        else:
-            if cfg.filter_kind == "bloom":
-                from cola_spark.filters.bloom import BloomFilter as _fcls
-            elif cfg.filter_kind == "cuckoo":
-                _fcls = None  # admit_filtered defaults to CuckooFilter
-            else:
-                raise ValueError(
-                    f"filter_kind must be cuckoo|bloom, got {cfg.filter_kind!r}"
-                )
-            admitted, _ns, new_filters = admit_filtered(
-                candidates, seen, _read_filters(spark, cfg, live["filters"]),
-                n_parts=cfg.filter_parts, capacity_per_part=cfg.filter_capacity,
-                mode=cfg.dedup_mode, filter_cls=_fcls,
-            )
-        admitted = admitted.persist()
-        # identical to the admit()-returned new-hash set, but derived
-        # from the persisted admitted so step 4 doesn't recompute admission
-        new_seen = admitted.filter(~F.col("force")).select("url_hash")
-
-        # 2-3. robots gate + this round's cut + fetch, fused into one job
-        pending_next = pending.unionByName(
-            robots_gate(admitted, robots, broadcast=cfg.broadcast_caps)
-        )
-        caps = budget_caps(bstate, cfg.adaptive)
-        scheduled = apply_global_cap(
-            schedule_cut(
-                pending_next, caps,
-                cfg.salt_buckets, broadcast_caps=cfg.broadcast_caps,
-            ),
-            cfg.global_cap,
-        )
-        if cfg.decode and cfg.fetch_mode == "fused":
-            from cola_spark.operators.fetch import fetch_decode_verify, fused_parts
-
-            # exact upper bound on this round's scheduled rows: the
-            # ledger's cap sum (tiny agg on the broadcast-size budget
-            # state), further clamped by the global cap — sizes the
-            # Python stage instead of a fixed partition constant
-            bound = caps.agg(F.sum("cap")).first()[0] or 0
-            if cfg.global_cap is not None:
-                bound = min(int(bound), cfg.global_cap)
-            fetched = fetch_decode_verify(
-                scheduled, cfg.n_images,
-                parts=fused_parts(int(bound), spark.sparkContext.defaultParallelism),
-                carry_all=True,
-            )
-        else:
-            fetched = synthetic_fetch(scheduled, images, cfg.n_images, decode=cfg.decode)
-        obs = Observation(f"round_{rnd}")
-        fetched = fetched.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_scheduled"),
-            F.sum(F.col("fetch_ok").cast("long")).alias("n_ok"),
-        )
-        log_cols = ["round", *FRONTIER_COLS, "host_rank", "image_id", "fetch_ok"]
-        if cfg.decode:
-            log_cols += ["fmt", "psnr", "invariant_ok"]
-        t_log0 = time.monotonic()
-        fetched.withColumn("round", F.lit(rnd)).select(*log_cols).write.mode(
-            "overwrite"
-        ).parquet(_p(cfg, "log", f"round={rnd}"))
-        t_log = time.monotonic() - t_log0
-        n_scheduled = obs.get["n_scheduled"]
-        stopped = n_scheduled == 0
-
-        # 4+5. persist dedup deltas + carry-over frontier + ledger.
-        # The four state writes are independent given the materialized
-        # log, so they run CONCURRENTLY (separate driver threads →
-        # separate Spark jobs): the per-round commit barrier costs
-        # max(write) instead of sum(write) — this is what made
-        # crawl_5rounds anti-scale 8→32 at sandbox SF. Seen deltas are
-        # written ALSO on natural stop: the oracle adds admissions to
-        # seen during admission, *before* its stop check — a stop round
-        # can admit (robots-blocked / over-cap) rows that must still be
-        # remembered, or a resume would re-admit them.
-        from concurrent.futures import ThreadPoolExecutor
-
-        log_r = spark.read.parquet(_p(cfg, "log", f"round={rnd}"))
-        from cola_spark.operators.budget import round_outcomes, update_budget_state_outcomes
-
-        bstate = update_budget_state_outcomes(bstate, round_outcomes(log_r))
-        writes = []
-        if cfg.dedup_mode != "cuckoo":
-            writes.append(
-                lambda: new_seen.repartition(
-                    cfg.seen_parts, F.pmod(F.col("url_hash"), F.lit(cfg.seen_parts))
-                )
-                .write.mode("overwrite")
-                .parquet(_p(cfg, "seen", f"delta={rnd}"))
-            )
-        if new_filters is not None:
-            writes.append(
-                lambda: new_filters.withColumn("delta", F.lit(rnd))
-                .write.mode("overwrite")
-                .parquet(_p(cfg, "filters", f"delta={rnd}"))
-            )
-        writes.append(
-            lambda: pending_next.join(log_r.select("seq"), "seq", "left_anti")
-            .write.mode("overwrite")
-            .parquet(_p(cfg, "state", f"round={rnd}", "pending"))
-        )
-        writes.append(
-            lambda: bstate.write.mode("overwrite").parquet(
-                _p(cfg, "state", f"round={rnd}", "budget")
-            )
-        )
-        t_st0 = time.monotonic()
-        with ThreadPoolExecutor(max_workers=len(writes)) as ex:
-            for fut in [ex.submit(w) for w in writes]:
-                fut.result()  # surface the first failure, after all joined
-        t_state = time.monotonic() - t_st0
-
-        # the round's deltas join the live lists only at the flip
-        delta = f"delta={rnd}"
-        live = {
-            "seen": live["seen"] + ([delta] if cfg.dedup_mode != "cuckoo" else []),
-            "filters": live["filters"] + ([delta] if new_filters is not None else []),
-        }
-        _commit_manifest(
-            cfg, rnd,
-            {
-                "round": rnd,
-                "scheduled": int(n_scheduled),
-                "fetched_ok": int(obs.get["n_ok"] or 0),
-                "stopped": stopped,
-                "secs": round(time.monotonic() - t0, 3),
-                # per-round stage metrics: the fused log job vs the
-                # concurrent state-commit barrier (the rest is candidate
-                # derivation + driver bookkeeping)
-                "log_secs": round(t_log, 3),
-                "state_secs": round(t_state, 3),
-            },
-            live,
-        )
-        admitted.unpersist()
-        from cola_spark.operators.dedup import release_persisted
-        from cola_spark.operators.ranking import release_persisted as release_ranked
-
-        release_persisted()
-        release_ranked()  # per-round global-cap rank caches
-        if stopped:
-            # the stop round is a fully committed round (log/seen/state
-            # all written, manifest points at rnd >= 0) — a resume reads
-            # the flag and returns instead of replaying empty rounds
-            break
-        pending = spark.read.parquet(_p(cfg, "state", f"round={rnd}", "pending"))
-        bstate = spark.read.parquet(_p(cfg, "state", f"round={rnd}", "budget"))
+        state = crawl_round(spark, cfg, rnd, candidates, state, robots, images)
         rnd += 1
-
     return crawl_log(spark, cfg)
 
 

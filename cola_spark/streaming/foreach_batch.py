@@ -1,95 +1,68 @@
-"""Continuous crawl via foreachBatch — the streaming mode that reuses
-the batch operators wholesale (SURVEY §2.8: "optional Structured
-Streaming mode with foreachBatch per round").
+"""Continuous crawl via foreachBatch — the streaming driver of the
+scheduler's round (SURVEY §2.8: "optional Structured Streaming mode
+with foreachBatch per round").
 
 A stream of newly discovered frontier rows (file drops, Kafka, ...) is
-consumed micro-batch by micro-batch; each micro-batch runs the same
-admission → robots → budget-cut pipeline as one scheduler round, with
-seen/budget state carried in the workdir exactly like the batch loop —
-so semantics, metrics, and resume behaviour are shared, and the
-exactly-once file-sink guarantees come from the streaming checkpoint.
+consumed micro-batch by micro-batch, and micro-batch ``b`` is crawl
+round ``b``: the same ``crawl_round`` body ``run_crawl`` loops
+(admission → robots → cut → fetch → log → state barrier → manifest
+flip), over the batch's rows plus the children and retries of round
+``b - 1``. There is one round body and one commit point: the crawl
+state lives in the workdir and ``manifest.json`` says which round is
+committed, so a restarted crawler (a new instance over the same
+workdir and checkpoint) picks up exactly where the last flip left it.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cola_spark.operators.budget import budget_caps, init_budget_state, update_budget_state
-from cola_spark.operators.dedup import FRONTIER_COLS, admit
-from cola_spark.operators.priority import schedule_cut
-from cola_spark.operators.robots import robots_gate
+from cola_spark.operators.dedup import FRONTIER_COLS
+from cola_spark.plans.scheduler import (
+    CrawlConfig, _derive_candidates, _manifest, _start_state, crawl_round,
+)
+from cola_spark.stateio import DEFAULT_IO
 
 
 class ForeachBatchCrawler:
-    """Stateful foreachBatch handler: call .attach(stream_df) to start."""
+    """foreachBatch handler running one crawl round per micro-batch;
+    call .attach(stream_df, checkpoint) to start.
 
-    def __init__(self, spark, robots: DataFrame, budgets: DataFrame, workdir: str,
-                 salt_buckets: int = 16):
+    Structured Streaming delivers a batch at least once, so
+    ``process_batch`` reads the committed round from the manifest:
+    a batch at or below it is a replay of a committed round and does
+    nothing, the next batch runs, and a gap raises. Round ``b`` writes
+    its outputs in overwrite mode before its flip, so a replay of a
+    batch whose flip did not happen redoes the round cleanly — the
+    same argument that makes ``run_crawl``'s resume safe. The stream,
+    not ``cfg.max_rounds`` or a round that schedules nothing, decides
+    when the crawl ends."""
+
+    def __init__(self, spark, robots: DataFrame, budgets: DataFrame,
+                 images: DataFrame, cfg: CrawlConfig):
         self.spark = spark
-        self.robots = robots
-        self.workdir = workdir
-        self.salt = salt_buckets
-        os.makedirs(workdir, exist_ok=True)
-        self._bstate = init_budget_state(budgets)
-        self._seen_dirs = 0
-        self._pending_batch: int | None = None
-
-    def _seen(self) -> DataFrame:
-        if self._seen_dirs == 0:
-            return self.spark.createDataFrame([], "url_hash long")
-        return self.spark.read.parquet(
-            *[f"{self.workdir}/seen/delta={i}" for i in range(self._seen_dirs)]
-        ).select("url_hash")
-
-    def _pending(self) -> DataFrame:
-        if self._pending_batch is None:
-            return self.spark.createDataFrame(
-                [],
-                "url string, url_canon string, url_hash long, host string, path string,"
-                " priority int, seq long, force boolean, error_times int",
-            )
-        return self.spark.read.parquet(
-            f"{self.workdir}/pending/batch={self._pending_batch}"
-        )
+        self.robots, self.budgets, self.images = robots, budgets, images
+        self.cfg = cfg
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        m = _manifest(self.cfg)
+        last = -1 if m is None else m["round"]
+        if batch_id <= last:
+            return  # replay of a committed round
+        if batch_id > last + 1:
+            raise ValueError(
+                f"micro-batch {batch_id} does not follow committed round {last}"
+            )
         candidates = batch_df.select(*FRONTIER_COLS)
-        admitted, new_seen = admit(candidates, self._seen())
-        admitted = admitted.persist()
-        allowed = robots_gate(admitted, self.robots)
-        # over-cap rows from earlier micro-batches stay schedulable —
-        # exactly like the batch loop's state/round=N/pending carry-over
-        # (admitted rows are 'seen', so without this union they would be
-        # dropped forever)
-        pending_all = self._pending().unionByName(allowed.select(*FRONTIER_COLS))
-        scheduled = schedule_cut(pending_all, budget_caps(self._bstate), self.salt)
-        scheduled.withColumn("batch_id", F.lit(batch_id)).write.mode("overwrite").parquet(
-            f"{self.workdir}/sched/batch={batch_id}"
+        if batch_id > 0:
+            candidates = candidates.unionByName(
+                _derive_candidates(self.spark, self.cfg, batch_id - 1)
+            )
+        state = _start_state(self.spark, self.cfg, self.budgets, m)
+        crawl_round(
+            self.spark, self.cfg, batch_id, candidates, state, self.robots, self.images
         )
-        admitted.filter(~F.col("force")).select("url_hash").write.mode("overwrite").parquet(
-            f"{self.workdir}/seen/delta={self._seen_dirs}"
-        )
-        self._seen_dirs += 1
-        sched_r = self.spark.read.parquet(f"{self.workdir}/sched/batch={batch_id}")
-        pending_all.join(sched_r.select("seq"), "seq", "left_anti").select(
-            *FRONTIER_COLS
-        ).write.mode("overwrite").parquet(f"{self.workdir}/pending/batch={batch_id}")
-        self._pending_batch = batch_id
-        counts = sched_r.groupBy("host").agg(F.count("*").alias("n_granted"))
-        zero = counts.select("host", F.lit(0).cast("long").alias("n"))
-        self._bstate = update_budget_state(
-            self._bstate, counts,
-            zero.withColumnRenamed("n", "n_finished"),
-            zero.withColumnRenamed("n", "n_errored"),
-        )
-        # broadcast-size: materialize so lineage doesn't grow per batch
-        self._bstate = self.spark.createDataFrame(
-            self._bstate.collect(), self._bstate.schema
-        )
-        admitted.unpersist()
 
     def attach(self, frontier_stream: DataFrame, checkpoint: str):
         return (
@@ -104,60 +77,55 @@ class StreamingCardinality:
     """foreachBatch HLL accumulator — the running frontier-cardinality
     metric (operators/cardinality.py) over an unbounded key stream.
 
-    State is the 256-row register table, persisted as versioned delta
-    dirs like the crawler's seen store: each micro-batch writes ONLY
-    its own batch sketch (delta={batch_id}), and the current state is
-    the elementwise-max merge of all deltas at read time. Because max
-    is IDEMPOTENT and commutative, at-least-once replays and
-    out-of-order batch arrivals cannot corrupt the metric — a replayed
-    batch re-writes an identical delta (overwrite mode) and the merge
-    absorbs it; no commit-ordering discipline is needed, in deliberate
-    contrast to NearDupStreamGate's output-first protocol (dedup
-    decisions are not a semilattice; a cardinality sketch is).
+    State is the 256-row register table, persisted as versioned dirs
+    under ``hll/``: each micro-batch writes ONLY its own batch sketch
+    (delta={batch_id}), and the current state is the elementwise-max
+    merge of every dir there at read time. Because max is IDEMPOTENT
+    and commutative, at-least-once replays and out-of-order batch
+    arrivals cannot corrupt the metric — a replayed batch re-writes an
+    identical delta (overwrite mode) and the merge absorbs it; no
+    commit-ordering discipline is needed, in deliberate contrast to
+    NearDupStreamGate's output-first protocol (dedup decisions are not
+    a semilattice; a cardinality sketch is).
 
-    compact() folds all deltas into delta=0 (same merge), bounding the
-    read fan-in the way the crawler's seen compaction does.
+    compact() folds every dir into a new ``compacted=<k>`` and only
+    then removes the dirs it folded, bounding the read fan-in the way
+    the crawler's seen compaction does. The same semilattice argument
+    makes it crash-safe without a manifest: whatever a crash leaves
+    (a partial fold, folded dirs not yet removed) is a set of dirs
+    whose merge is the committed state. Listing and removal go through
+    the StateIO seam (``io``)."""
 
-    State layout note: delta discovery uses local-FS listing here (the
-    sandbox form, same as ForeachBatchCrawler's workdir); on an object
-    store the existing StateIO seam (stateio.py — prefix listing,
-    manifest-as-commit) is the drop-in, exactly as ann_index.py and
-    chunkstore.py demonstrate. The merge semantics are storage-
-    independent."""
+    io = DEFAULT_IO
 
     def __init__(self, spark, workdir: str, key_col: str = "url",
                  hash_kind: str = "md5"):
         self.spark, self.workdir = spark, workdir
         self.key_col, self.hash_kind = key_col, hash_kind
-        os.makedirs(f"{workdir}/hll", exist_ok=True)
+        self.io.makedirs(f"{workdir}/hll")
 
-    def _delta_ids(self) -> list:
-        base = f"{self.workdir}/hll"
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(base)
-            if d.startswith("delta=")
-        )
+    def _dirs(self) -> list[str]:
+        return self.io.list_dirs(f"{self.workdir}/hll/*=*")
 
     def registers(self) -> DataFrame:
         from cola_spark.operators.cardinality import M_DEFAULT, hll_merge
 
-        ids = self._delta_ids()
-        if not ids:
-            return self.spark.range(M_DEFAULT).select(
-                F.col("id").alias("bucket"),
-                F.lit(0).cast("long").alias("register"),
-            )
-        frames = [
-            self.spark.read.parquet(f"{self.workdir}/hll/delta={i}")
-            for i in ids
-        ]
-        return hll_merge(*frames)
+        zero = self.spark.range(M_DEFAULT).select(
+            F.col("id").alias("bucket"),
+            F.lit(0).cast("long").alias("register"),
+        )
+        dirs = self._dirs()
+        if not dirs:
+            return zero
+        # an explicit schema reads a dir a crash left without data
+        # files as empty; the zero table keeps every bucket present
+        regs = self.spark.read.schema("bucket long, register long").parquet(*dirs)
+        return hll_merge(zero, regs)
 
     def estimate_row(self):
         from cola_spark.operators.cardinality import hll_estimate
 
-        return hll_estimate(self.registers()).collect()[0]
+        return hll_estimate(self.registers()).first()
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         from cola_spark.operators.cardinality import hll_registers
@@ -169,17 +137,17 @@ class StreamingCardinality:
         )
 
     def compact(self) -> None:
-        ids = self._delta_ids()
-        if len(ids) <= 1:
+        dirs = self._dirs()
+        if len(dirs) <= 1:
             return
-        merged = self.registers()
-        tmp = f"{self.workdir}/hll_compact_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        for i in ids:
-            shutil.rmtree(f"{self.workdir}/hll/delta={i}")
-        os.rename(tmp, f"{self.workdir}/hll/delta=0")
+        k = 1 + max(
+            (int(d.rsplit("=", 1)[1]) for d in dirs if "/compacted=" in d), default=-1
+        )
+        self.registers().write.mode("overwrite").parquet(
+            f"{self.workdir}/hll/compacted={k}"
+        )
+        for d in dirs:  # folded dirs only after the fold is written
+            self.io.remove_dir(d)
 
     def attach(self, key_stream: DataFrame, checkpoint: str):
         return (

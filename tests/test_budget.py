@@ -8,7 +8,7 @@ from cola_spark.operators.budget import (
     all_finished,
     budget_caps,
     init_budget_state,
-    update_budget_state,
+    update_budget_state_outcomes,
 )
 
 
@@ -16,8 +16,11 @@ def _budgets(spark, rows):
     return spark.createDataFrame(rows, "host string, budget long, rate_per_round long")
 
 
-def _counts(spark, d, name):
-    return spark.createDataFrame(list(d.items()), f"host string, {name} long")
+def _outcomes(spark, rows):
+    """One round's (host, n_granted, n_finished, n_errored) frame."""
+    return spark.createDataFrame(
+        rows, "host string, n_granted long, n_finished long, n_errored long"
+    )
 
 
 def test_apply_never_over_grants(spark):
@@ -25,20 +28,16 @@ def test_apply_never_over_grants(spark):
     caps = {r.host: r.cap for r in budget_caps(st).collect()}
     assert caps == {"h1": 3, "h2": 10}  # min(remaining, rate)
     # grant 3 to h1 twice → remaining 2 then cap 2; never exceeds budget
-    st = update_budget_state(st, _counts(spark, {"h1": 3}, "n_granted"),
-                             _counts(spark, {}, "n_finished"), _counts(spark, {}, "n_errored"))
+    st = update_budget_state_outcomes(st, _outcomes(spark, [("h1", 3, 0, 0)]))
     caps = {r.host: r.cap for r in budget_caps(st).collect()}
     assert caps["h1"] == 2
-    st = update_budget_state(st, _counts(spark, {"h1": 2}, "n_granted"),
-                             _counts(spark, {}, "n_finished"), _counts(spark, {}, "n_errored"))
+    st = update_budget_state_outcomes(st, _outcomes(spark, [("h1", 2, 0, 0)]))
     assert "h1" not in {r.host for r in budget_caps(st).collect()}  # exhausted
 
 
 def test_error_returns_budget(spark):
     st = init_budget_state(_budgets(spark, [("h1", 5, 5)]))
-    st = update_budget_state(st, _counts(spark, {"h1": 5}, "n_granted"),
-                             _counts(spark, {"h1": 3}, "n_finished"),
-                             _counts(spark, {"h1": 2}, "n_errored"))
+    st = update_budget_state_outcomes(st, _outcomes(spark, [("h1", 5, 3, 2)]))
     row = st.first()
     assert row.applied == 3 and row.finished == 3 and row.errored == 2
     caps = {r.host: r.cap for r in budget_caps(st).collect()}
@@ -48,9 +47,9 @@ def test_error_returns_budget(spark):
 def test_allfinished_transition(spark):
     st = init_budget_state(_budgets(spark, [("h1", 2, 9), ("h2", 1, 9)]))
     assert not all_finished(st)
-    st = update_budget_state(st, _counts(spark, {"h1": 2, "h2": 1}, "n_granted"),
-                             _counts(spark, {"h1": 2, "h2": 1}, "n_finished"),
-                             _counts(spark, {}, "n_errored"))
+    st = update_budget_state_outcomes(
+        st, _outcomes(spark, [("h1", 2, 2, 0), ("h2", 1, 1, 0)])
+    )
     assert all_finished(st)
 
 

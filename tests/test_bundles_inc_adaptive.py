@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from cola_spark.operators.budget import budget_caps, init_budget_state, update_budget_state
+from cola_spark.operators.budget import budget_caps, init_budget_state, update_budget_state_outcomes
 from cola_spark.operators.bundles import bundle_reduce, schedule_bundles
 from cola_spark.operators.inc import INC_SEQ_OFFSET, inc_requeue
 
@@ -57,28 +57,33 @@ def test_adaptive_rate_backoff_and_recovery(spark):
     st = init_budget_state(budgets)
     caps = {r.host: r.cap for r in budget_caps(st, adaptive=True).collect()}
     assert caps["h1"] == 10  # no errors yet
-    c = lambda d, n: spark.createDataFrame(list(d.items()), f"host string, {n} long")
+    def c(granted, finished, errored):  # one round's outcomes for h1
+        return spark.createDataFrame(
+            [("h1", granted, finished, errored)],
+            "host string, n_granted long, n_finished long, n_errored long",
+        )
+
     # a bad round: 7 errors, hist [7] → next-round rate backs off to 3
-    st = update_budget_state(st, c({"h1": 10}, "n_granted"), c({"h1": 3}, "n_finished"), c({"h1": 7}, "n_errored"))
+    st = update_budget_state_outcomes(st, c(10, 3, 7))
     caps = {r.host: r.cap for r in budget_caps(st, adaptive=True).collect()}
     assert caps["h1"] == 3
     # non-adaptive ignores the backoff
     caps = {r.host: r.cap for r in budget_caps(st, adaptive=False).collect()}
     assert caps["h1"] == 10
     # a clean round: hist [0,7] → backoff ceil(7/2)=4 → gradual recovery
-    st = update_budget_state(st, c({"h1": 3}, "n_granted"), c({"h1": 3}, "n_finished"), c({}, "n_errored"))
+    st = update_budget_state_outcomes(st, c(3, 3, 0))
     caps = {r.host: r.cap for r in budget_caps(st, adaptive=True).collect()}
     assert caps["h1"] == 6
     # two more clean rounds: the bad round ages out → full recovery
-    st = update_budget_state(st, c({"h1": 6}, "n_granted"), c({"h1": 6}, "n_finished"), c({}, "n_errored"))
+    st = update_budget_state_outcomes(st, c(6, 6, 0))
     caps = {r.host: r.cap for r in budget_caps(st, adaptive=True).collect()}
     assert caps["h1"] == 7  # hist [0,0,7] → ceil(7/3)=3
-    st = update_budget_state(st, c({"h1": 7}, "n_granted"), c({"h1": 7}, "n_finished"), c({}, "n_errored"))
+    st = update_budget_state_outcomes(st, c(7, 7, 0))
     caps = {r.host: r.cap for r in budget_caps(st, adaptive=True).collect()}
     assert caps["h1"] == 10  # hist [0,0,0]
     # floor at 1: SUSTAINED catastrophe never kills the host entirely
     for _ in range(3):
-        st = update_budget_state(st, c({"h1": 10}, "n_granted"), c({}, "n_finished"), c({"h1": 10}, "n_errored"))
+        st = update_budget_state_outcomes(st, c(10, 0, 10))
     caps = {r.host: r.cap for r in budget_caps(st, adaptive=True).collect()}
     assert caps["h1"] == 1
 
@@ -90,12 +95,12 @@ def test_adaptive_window_no_overthrottle_on_one_noisy_round(spark):
     window keeps it at 10-ceil(9/3) = 7."""
     budgets = spark.createDataFrame([("h1", 1000, 10)], "host string, budget long, rate_per_round long")
     st = init_budget_state(budgets)
-    c = lambda d, n: spark.createDataFrame(list(d.items()), f"host string, {n} long")
     # two clean rounds of history, then one 9-error spike
-    for errs in ({}, {}, {"h1": 9}):
-        st = update_budget_state(st, c({"h1": 10}, "n_granted"),
-                                 c({"h1": 10 - errs.get("h1", 0)}, "n_finished"),
-                                 c(errs, "n_errored"))
+    for errs in (0, 0, 9):
+        st = update_budget_state_outcomes(st, spark.createDataFrame(
+            [("h1", 10, 10 - errs, errs)],
+            "host string, n_granted long, n_finished long, n_errored long",
+        ))
     caps = {r.host: r.cap for r in budget_caps(st, adaptive=True).collect()}
     assert caps["h1"] == 7  # hist [9,0,0] → ceil(9/3)=3; NOT 1
 

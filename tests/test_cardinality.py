@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import hashlib
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cola_spark.operators.cardinality import (
@@ -115,8 +117,42 @@ def test_streaming_cardinality_accumulator(spark, tmp_path):
     # compaction folds deltas, registers unchanged; a fresh handler
     # on the same workdir reads the same state (restart continuity)
     acc.compact()
-    assert len(acc._delta_ids()) == 1
+    assert acc._dirs() == [f"{wd}/hll/compacted=0"]
     acc2 = StreamingCardinality(spark, wd)
     assert {
         r.bucket: r.register for r in acc2.registers().collect()
     } == batch_regs
+
+
+def test_streaming_cardinality_compaction_crash_keeps_registers(spark, tmp_path, monkeypatch):
+    """A crash in compact()'s removal step, after the fold is written
+    and one folded dir is gone, leaves dirs whose max-merge is still
+    the committed registers; the next compact() folds them into one."""
+    import shutil
+
+    from cola_spark.streaming.foreach_batch import StreamingCardinality
+
+    wd = str(tmp_path / "wd")
+    acc = StreamingCardinality(spark, wd)
+    for b in range(3):
+        acc.process_batch(_urls(spark, 500, prefix=f"b{b}_"), b)
+    before = {r.bucket: r.register for r in acc.registers().collect()}
+
+    rmtree = shutil.rmtree
+
+    def crash_after_first_removal(path, *args, **kwargs):
+        rmtree(path, *args, **kwargs)
+        raise RuntimeError("crash in the removal step")
+
+    monkeypatch.setattr(shutil, "rmtree", crash_after_first_removal)
+    with pytest.raises(RuntimeError, match="removal"):
+        acc.compact()
+    monkeypatch.undo()
+    assert {r.bucket: r.register for r in acc.registers().collect()} == before
+    # a crash inside a fold's write leaves a dir with no data files yet
+    os.makedirs(f"{wd}/hll/compacted=9/_temporary/0")
+    assert {r.bucket: r.register for r in acc.registers().collect()} == before
+
+    acc.compact()
+    assert len(acc._dirs()) == 1
+    assert {r.bucket: r.register for r in acc.registers().collect()} == before

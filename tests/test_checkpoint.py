@@ -8,6 +8,8 @@
 - hybrid cuckoo admission ≡ exact admission (filter only prunes)
 - pure cuckoo mode: bloom semantics (no false negatives: crawled set ⊆
   exact-mode crawled set; near-equal size at tiny FP rate)
+- the foreachBatch driver runs the same round body: seeds as micro-batch
+  0 and empty batches after it reproduce the straight run
 """
 
 import json
@@ -17,7 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
-from cola_spark.plans.scheduler import CrawlConfig, latest_round, run_crawl
+from cola_spark.plans.scheduler import CrawlConfig, crawl_log, latest_round, run_crawl
 from cola_spark.sources import gen_budgets, gen_frontier_seeds, gen_images, gen_robots
 from cola_spark.stateio import LocalStateIO, ObjectStoreStateIO
 
@@ -251,3 +253,19 @@ def test_resume_reproduces_full_run_on_objectstore(spark, inputs, exact_ref, tmp
     cfg.max_rounds = ROUNDS
     log = run_crawl(spark, *inputs, cfg, resume=True)
     assert _rows(log) == exact_ref[0]
+
+
+def test_foreach_batch_reproduces_run_crawl(spark, inputs, exact_ref, tmp_path):
+    """One round body, two drivers: the seeds as micro-batch 0, then
+    empty micro-batches, give run_crawl's log row for row."""
+    from cola_spark.operators.dedup import prepare_frontier
+    from cola_spark.streaming.foreach_batch import ForeachBatchCrawler
+
+    seeds, robots, budgets, images = inputs
+    cfg = _cfg(str(tmp_path / "fb"))
+    crawler = ForeachBatchCrawler(spark, robots, budgets, images, cfg)
+    frontier = prepare_frontier(seeds.select("url", "priority", "seq", "force"))
+    crawler.process_batch(frontier, 0)
+    for b in range(1, ROUNDS):
+        crawler.process_batch(frontier.limit(0), b)
+    assert _rows(crawl_log(spark, cfg)) == exact_ref[0]

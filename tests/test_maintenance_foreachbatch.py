@@ -116,46 +116,67 @@ def test_vacuum_keeps_committed_round_over_orphan(spark, tmp_path):
     assert latest_round(cfg) == 2
 
 
+def _drop(spark, d, i, rows):
+    """Frontier rows as the single-file parquet drop ``b<i>``."""
+    from cola_spark.operators.dedup import prepare_frontier
+
+    prepare_frontier(
+        spark.createDataFrame(rows, "url string, priority int, seq long, force boolean")
+    ).repartition(1).write.mode("overwrite").parquet(f"{d}/b{i}")
+
+
+def _drop_stream(spark, d):
+    """The drops as a stream; with maxFilesPerTrigger=1 each drop is
+    exactly one micro-batch."""
+    schema = spark.read.parquet(f"{d}/b0").schema
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{d}/b*")
+
+
+def _stream_crawl(spark, crawler, stream, checkpoint):
+    q = crawler.attach(stream, checkpoint)
+    q.processAllAvailable()
+    q.stop()
+    return crawl_log(spark, crawler.cfg)
+
+
 def test_foreach_batch_pending_carryover(spark, tmp_path):
     """Rows admitted but beyond a micro-batch's per-host cap must stay
     schedulable in later micro-batches (they are 'seen' already, so
-    dropping them would lose them forever)."""
-    from cola_spark.operators.dedup import prepare_frontier
+    dropping them would lose them forever). Each batch is a crawl
+    round, so the streamed log is the oracle's: /p/0's synthetic fetch
+    always fails, its two retries take a slot in batches 1 and 2, and
+    the last two carried-over pages are scheduled in batch 3."""
+    from cola_spark.plans.oracle import run_oracle
     from cola_spark.streaming.foreach_batch import ForeachBatchCrawler
 
-    d = str(tmp_path / "drops2")
-    os.makedirs(d)
-    # one host, 6 distinct pages, budget 10 but rate 2/batch
+    # one host, 6 distinct pages, budget 10 but rate 2/batch; batches
+    # 1-3 carry no new URLs for the host — only the carry-over
     urls = [(f"http://only.example/p/{i}", 0, i, False) for i in range(6)]
-    fr = prepare_frontier(
-        spark.createDataFrame(urls, "url string, priority int, seq long, force boolean")
-    )
-    # single part-file per drop: with maxFilesPerTrigger=1 each drop is
-    # exactly one micro-batch
-    fr.repartition(1).write.mode("overwrite").parquet(f"{d}/b0")
-    # batches 1-2 carry no new URLs for the host — only the carry-over
-    fr.limit(0).repartition(1).write.mode("overwrite").parquet(f"{d}/b1")
-    fr.limit(0).repartition(1).write.mode("overwrite").parquet(f"{d}/b2")
-
+    d = str(tmp_path / "drops2")
+    for i, rows in enumerate([urls, [], [], []]):
+        _drop(spark, d, i, rows)
     budgets = spark.createDataFrame(
         [("only.example", 10, 2)], "host string, budget long, rate_per_round long"
     )
     robots = spark.createDataFrame([], "host string, disallow_prefix string")
-    schema = spark.read.parquet(f"{d}/b0").schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{d}/b*")
-    )
-    crawler = ForeachBatchCrawler(spark, robots, budgets, str(tmp_path / "wd2"))
-    q = crawler.attach(stream, str(tmp_path / "ck2"))
-    q.processAllAvailable()
-    q.stop()
+    cfg = CrawlConfig(workdir=str(tmp_path / "wd2"), n_images=20, decode=False)
+    crawler = ForeachBatchCrawler(spark, robots, budgets, gen_images(spark, 20), cfg)
+    log = _stream_crawl(spark, crawler, _drop_stream(spark, d), str(tmp_path / "ck2"))
 
-    sched = spark.read.parquet(f"{tmp_path}/wd2/sched/batch=*")
-    per_batch = {r.batch_id: r.n for r in sched.groupBy("batch_id").agg(F.count("*").alias("n")).collect()}
+    rows = [(r.round, r.url, r.fetch_ok, r.error_times) for r in log.orderBy("global_rank").collect()]
     # rate caps each batch at 2; carry-over keeps later batches fed
-    assert per_batch.get(0) == 2 and per_batch.get(1) == 2 and per_batch.get(2) == 2
-    # all six distinct pages eventually scheduled, none lost, none duplicated
-    assert sched.select("url_hash").distinct().count() == 6
+    assert [sum(1 for r in rows if r[0] == b) for b in range(4)] == [2, 2, 2, 2]
+    # all six distinct pages scheduled, none lost, none scheduled twice
+    # except as a retry of a failed fetch
+    first = [r[1] for r in rows if r[3] == 0]
+    assert sorted(first) == sorted(u for u, *_ in urls)
+    assert all(not r[2] for r in rows if r[1] == urls[0][0])
+    oracle = run_oracle(
+        [dict(zip(("url", "priority", "seq", "force"), u)) for u in urls], [],
+        [{"host": "only.example", "budget": 10, "rate_per_round": 2}],
+        pages_per_host=cfg.pages_per_host, max_rounds=4,
+    )
+    assert rows == [(o["round"], o["url"], o["fetch_ok"], o["error_times"]) for o in oracle["order"]]
 
 
 def test_foreach_batch_crawler(spark, tmp_path):
@@ -163,27 +184,91 @@ def test_foreach_batch_crawler(spark, tmp_path):
     from cola_spark.streaming.foreach_batch import ForeachBatchCrawler
 
     d = str(tmp_path / "drops")
-    os.makedirs(d)
     seeds = gen_frontier_seeds(spark, 400, n_hosts=8, pages_per_host=20)
     fr = prepare_frontier(seeds.select("url", "priority", "seq", "force"))
     for i in range(2):
-        fr.filter(F.pmod(F.col("seq"), F.lit(2)) == i).write.mode("overwrite").parquet(f"{d}/b{i}")
+        fr.filter(F.pmod(F.col("seq"), F.lit(2)) == i).repartition(1).write.mode(
+            "overwrite"
+        ).parquet(f"{d}/b{i}")
 
-    schema = spark.read.parquet(f"{d}/b0").schema
-    stream = spark.readStream.schema(schema).parquet(f"{d}/b*")
+    cfg = CrawlConfig(workdir=str(tmp_path / "wd"), n_images=20, pages_per_host=20, decode=False)
     crawler = ForeachBatchCrawler(
-        spark, gen_robots(spark, 8), gen_budgets(spark, 8), str(tmp_path / "wd")
+        spark, gen_robots(spark, 8), gen_budgets(spark, 8), gen_images(spark, 20), cfg
     )
-    q = crawler.attach(stream, str(tmp_path / "ck"))
-    q.processAllAvailable()
-    q.stop()
+    log = _stream_crawl(spark, crawler, _drop_stream(spark, d), str(tmp_path / "ck"))
 
-    sched = spark.read.parquet(f"{tmp_path}/wd/sched/batch=*")
-    n = sched.count()
-    assert n > 0
-    # no URL scheduled twice across micro-batches (cross-batch dedup state)
-    assert sched.select("url_hash").distinct().count() == n
-    # per-host totals never exceed budget
-    per_host = sched.groupBy("host").agg(F.count("*").alias("n")).collect()
-    budgets = {r.host: r.budget for r in gen_budgets(spark, 8).collect()}
-    assert all(r.n <= budgets[r.host] for r in per_host)
+    rows = log.collect()
+    assert rows and {r.round for r in rows} == {0, 1}
+    # no URL scheduled twice across micro-batches (cross-batch dedup
+    # state), except as a retry of a failed fetch or a force row (a
+    # re-crawl the seeds ask for, which bypasses dedup by design)
+    deduped = [r.url_hash for r in rows if not r.force]
+    assert len(set(deduped)) == len(deduped)
+    failed = {r.url_hash for r in rows if not r.fetch_ok}
+    assert all(r.url_hash in failed for r in rows if r.error_times > 0)
+    # per-host grants net of errors never exceed budget; per-host
+    # grants per batch never exceed the rate
+    budgets = {r.host: r for r in gen_budgets(spark, 8).collect()}
+    for host in {r.host for r in rows}:
+        assert sum(r.fetch_ok for r in rows if r.host == host) <= budgets[host].budget
+        for b in (0, 1):
+            n = sum(1 for r in rows if r.host == host and r.round == b)
+            assert n <= budgets[host].rate_per_round
+
+
+def test_foreach_batch_restart_schedules_each_url_once(spark, tmp_path):
+    """A restart is a new crawler over the same workdir and checkpoint.
+    URLs re-discovered after it must dedup against what the first
+    instance admitted: the crawl state is the manifest's, not the
+    instance's."""
+    from cola_spark.streaming.foreach_batch import ForeachBatchCrawler
+
+    d = str(tmp_path / "drops")
+    urls = [f"http://h.example/p/{i}" for i in range(1, 5)]
+    budgets = spark.createDataFrame(
+        [("h.example", 100, 10)], "host string, budget long, rate_per_round long"
+    )
+    robots = spark.createDataFrame([], "host string, disallow_prefix string")
+    cfg = CrawlConfig(workdir=str(tmp_path / "wd"), n_images=20, decode=False)
+    images = gen_images(spark, 20)
+
+    first = ForeachBatchCrawler(spark, robots, budgets, images, cfg)
+    _drop(spark, d, 0, [(u, 0, i, False) for i, u in enumerate(urls)])
+    _stream_crawl(spark, first, _drop_stream(spark, d), str(tmp_path / "ck"))
+    # the same four URLs, re-discovered after the restart
+    _drop(spark, d, 1, [(u, 0, 100 + i, False) for i, u in enumerate(urls)])
+    second = ForeachBatchCrawler(spark, robots, budgets, images, cfg)
+    log = _stream_crawl(spark, second, _drop_stream(spark, d), str(tmp_path / "ck"))
+
+    assert {r.round for r in log.collect()} == {0, 1}
+    rows = log.filter(~F.col("force")).collect()  # retries are force rows
+    assert sorted(r.url for r in rows if r.round == 0) == urls
+    assert len({r.url_hash for r in rows}) == len(rows)  # each URL once
+
+
+def test_foreach_batch_replay_is_noop(spark, tmp_path):
+    """At-least-once delivery: a replayed micro-batch of a committed
+    round leaves the round, its log and the manifest as they were; a
+    batch that skips a round fails closed."""
+    from cola_spark.operators.dedup import prepare_frontier
+    from cola_spark.plans.scheduler import latest_round
+    from cola_spark.streaming.foreach_batch import ForeachBatchCrawler
+
+    seeds = gen_frontier_seeds(spark, 60, n_hosts=4, pages_per_host=10)
+    fr = prepare_frontier(seeds.select("url", "priority", "seq", "force"))
+    cfg = CrawlConfig(workdir=str(tmp_path / "wd"), n_images=20, pages_per_host=10, decode=False)
+    crawler = ForeachBatchCrawler(
+        spark, gen_robots(spark, 4), gen_budgets(spark, 4), gen_images(spark, 20), cfg
+    )
+    manifest = os.path.join(cfg.workdir, "manifest.json")
+
+    crawler.process_batch(fr, 0)
+    committed = open(manifest).read()
+    log = [tuple(r) for r in crawl_log(spark, cfg).orderBy("global_rank").collect()]
+    assert log
+    crawler.process_batch(fr, 0)
+    assert latest_round(cfg) == 0
+    assert open(manifest).read() == committed
+    assert [tuple(r) for r in crawl_log(spark, cfg).orderBy("global_rank").collect()] == log
+    with pytest.raises(ValueError, match="committed round 0"):
+        crawler.process_batch(fr.limit(0), 2)
