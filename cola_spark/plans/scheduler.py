@@ -22,7 +22,9 @@ and one observation read — the analogue of cola's two RPCs:
   2. seen/delta=r     — append-only new-hash delta (never rewrites the
                         accumulated seen set — at the 10^10-URL design
                         point a per-round rewrite would be the bottleneck),
-                        sized by the round's rows, not by seen_parts
+                        written with the admitted frame's partitions,
+                        coalesced to at most one wave of tasks, not
+                        repartitioned to seen_parts
   3. filters/delta=r  — changed cuckoo-filter blobs only (latest blob
                         per part wins on read)
   4. state/round=r/pending — unscheduled frontier carry-over
@@ -197,7 +199,11 @@ def _start_state(
     spark: SparkSession, cfg: CrawlConfig, budgets: DataFrame, m: dict | None
 ) -> RoundState:
     """The state the round after manifest ``m`` starts from; a fresh
-    crawl's (empty frontier, unspent ledger) when ``m`` is None."""
+    crawl's (empty frontier, unspent ledger) when ``m`` is None. Both
+    drivers call it before any round output is written, so it is where
+    the config is checked."""
+    if cfg.dedup_mode not in ("exact", "hybrid", "cuckoo"):
+        raise ValueError(f"dedup_mode must be exact|hybrid|cuckoo, got {cfg.dedup_mode!r}")
     if m is None:
         cfg.io.makedirs(cfg.workdir)
         return RoundState(
@@ -209,13 +215,8 @@ def _start_state(
 
 
 def crawl_round(
-    spark: SparkSession,
-    cfg: CrawlConfig,
-    rnd: int,
-    candidates: DataFrame,
-    state: RoundState,
-    robots: DataFrame,
-    images: DataFrame,
+    spark: SparkSession, cfg: CrawlConfig, rnd: int, candidates: DataFrame,
+    state: RoundState, robots: DataFrame, images: DataFrame,
 ) -> RoundState | None:
     """Round ``rnd`` over ``candidates``: admission → robots → cut →
     fetch → log write → concurrent state barrier → manifest flip.
@@ -225,10 +226,6 @@ def crawl_round(
     whose flip did not happen (a resume, a replayed micro-batch) is
     safe. Returns the state round ``rnd + 1`` starts from, or None when
     the round scheduled nothing (the crawl's natural stop)."""
-    if cfg.dedup_mode not in ("exact", "hybrid", "cuckoo"):
-        raise ValueError(
-            f"dedup_mode must be exact|hybrid|cuckoo, got {cfg.dedup_mode!r}"
-        )
     t0 = time.monotonic()
     # 1. admission: the dedup gate on everything entering the frontier
     seen = _read_seen(spark, cfg, state.live["seen"])
@@ -318,11 +315,13 @@ def crawl_round(
     bstate = update_budget_state_outcomes(state.budget, round_outcomes(log_r))
     writes = []
     if cfg.dedup_mode != "cuckoo":
-        # no fixed repartition: a delta holds one round's new hashes,
-        # and every reader (the anti-join, the hybrid suspect check)
-        # shuffles seen anyway; compaction restores seen_parts
+        # no shuffle: every reader of seen shuffles it anyway, and
+        # compaction restores seen_parts; the coalesce caps the write
+        # at one wave (with AQE off admitted has every shuffle partition)
         writes.append(
-            lambda: new_seen.write.mode("overwrite").parquet(_p(cfg, "seen", f"delta={rnd}"))
+            lambda: new_seen.coalesce(spark.sparkContext.defaultParallelism)
+            .write.mode("overwrite")
+            .parquet(_p(cfg, "seen", f"delta={rnd}"))
         )
     if new_filters is not None:
         writes.append(
@@ -392,9 +391,9 @@ def run_crawl(
     """Run the crawl to completion; returns the crawl log (one row per
     scheduled fetch)."""
     mft = _manifest(cfg) if resume else None
-    if mft is not None and mft.get("stats", {}).get("stopped"):
-        return crawl_log(spark, cfg)  # crawl already reached its natural stop
     state = _start_state(spark, cfg, budgets, mft)
+    if mft is not None and mft.get("stats", {}).get("stopped"):
+        state = None  # crawl already reached its natural stop
     rnd = 0 if mft is None else mft["round"] + 1
     while state is not None and rnd < cfg.max_rounds:
         if rnd == 0:

@@ -37,7 +37,9 @@ class ForeachBatchCrawler:
     batch whose flip did not happen redoes the round cleanly — the
     same argument that makes ``run_crawl``'s resume safe. The stream,
     not ``cfg.max_rounds`` or a round that schedules nothing, decides
-    when the crawl ends."""
+    when the crawl ends. ``attach`` refuses a checkpoint with no
+    offsets over a workdir that holds a committed crawl: its batches
+    would start again at 0 and be dropped as replays."""
 
     def __init__(self, spark, robots: DataFrame, budgets: DataFrame,
                  images: DataFrame, cfg: CrawlConfig):
@@ -65,6 +67,11 @@ class ForeachBatchCrawler:
         )
 
     def attach(self, frontier_stream: DataFrame, checkpoint: str):
+        if _manifest(self.cfg) and not self.cfg.io.list_dirs(f"{checkpoint}/offsets/*"):
+            raise ValueError(
+                f"checkpoint {checkpoint} has no offsets but workdir "
+                f"{self.cfg.workdir} holds a committed crawl"
+            )
         return (
             frontier_stream.writeStream.foreachBatch(self.process_batch)
             .option("checkpointLocation", checkpoint)
@@ -94,18 +101,16 @@ class StreamingCardinality:
     makes it crash-safe without a manifest: whatever a crash leaves
     (a partial fold, folded dirs not yet removed) is a set of dirs
     whose merge is the committed state. Listing and removal go through
-    the StateIO seam (``io``)."""
-
-    io = DEFAULT_IO
+    the StateIO seam."""
 
     def __init__(self, spark, workdir: str, key_col: str = "url",
                  hash_kind: str = "md5"):
         self.spark, self.workdir = spark, workdir
         self.key_col, self.hash_kind = key_col, hash_kind
-        self.io.makedirs(f"{workdir}/hll")
+        DEFAULT_IO.makedirs(f"{workdir}/hll")
 
     def _dirs(self) -> list[str]:
-        return self.io.list_dirs(f"{self.workdir}/hll/*=*")
+        return DEFAULT_IO.list_dirs(f"{self.workdir}/hll/*=*")
 
     def registers(self) -> DataFrame:
         from cola_spark.operators.cardinality import M_DEFAULT, hll_merge
@@ -147,7 +152,7 @@ class StreamingCardinality:
             f"{self.workdir}/hll/compacted={k}"
         )
         for d in dirs:  # folded dirs only after the fold is written
-            self.io.remove_dir(d)
+            DEFAULT_IO.remove_dir(d)
 
     def attach(self, key_stream: DataFrame, checkpoint: str):
         return (

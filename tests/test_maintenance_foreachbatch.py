@@ -246,6 +246,30 @@ def test_foreach_batch_restart_schedules_each_url_once(spark, tmp_path):
     assert len({r.url_hash for r in rows}) == len(rows)  # each URL once
 
 
+def test_foreach_batch_fresh_checkpoint_on_used_workdir_fails(spark, tmp_path):
+    """A fresh checkpoint numbers its micro-batches from 0 again; over a
+    workdir with a committed crawl they would be taken for replays and
+    their URLs dropped, so attach refuses it before any batch runs."""
+    from cola_spark.streaming.foreach_batch import ForeachBatchCrawler
+
+    d = str(tmp_path / "drops")
+    budgets = spark.createDataFrame(
+        [("h.example", 100, 10)], "host string, budget long, rate_per_round long"
+    )
+    robots = spark.createDataFrame([], "host string, disallow_prefix string")
+    cfg = CrawlConfig(workdir=str(tmp_path / "wd"), n_images=20, decode=False)
+    crawler = ForeachBatchCrawler(spark, robots, budgets, gen_images(spark, 20), cfg)
+    _drop(spark, d, 0, [("http://h.example/p/1", 0, 0, False)])
+    crawler.process_batch(spark.read.parquet(f"{d}/b0"), 0)
+    manifest = os.path.join(cfg.workdir, "manifest.json")
+    committed = open(manifest).read()
+
+    _drop(spark, d, 1, [("http://h.example/p/2", 0, 1, False)])
+    with pytest.raises(ValueError, match="no offsets"):
+        crawler.attach(_drop_stream(spark, d), str(tmp_path / "fresh_ck"))
+    assert open(manifest).read() == committed
+
+
 def test_foreach_batch_replay_is_noop(spark, tmp_path):
     """At-least-once delivery: a replayed micro-batch of a committed
     round leaves the round, its log and the manifest as they were; a
