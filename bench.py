@@ -433,7 +433,7 @@ def main() -> None:
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     t0 = time.monotonic()
-    minhash_dedup_pairs(docs, eager_release=True).write.format(
+    minhash_dedup_pairs(docs).write.format(
         "noop").mode("overwrite").save()
     timings["minhash_production"] = round(time.monotonic() - t0, 3)
 
@@ -467,7 +467,7 @@ def main() -> None:
     ).write.format("noop").mode("overwrite").save()
     timings["jaccard_allpairs_boiler"] = round(time.monotonic() - t0, 3)
     t0 = time.monotonic()
-    prefix_jaccard_pairs(boiler, eager_release=True).write.format(
+    prefix_jaccard_pairs(boiler).write.format(
         "noop").mode("overwrite").save()
     timings["jaccard_prefix_boiler"] = round(time.monotonic() - t0, 3)
     dedup_scale = {

@@ -33,7 +33,8 @@ def orders_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+def scheduled_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The round's scheduled rows, before the global order."""
     frontier = prepare_frontier(orders_frontier(spark, sf_dir))
     seen = spark.createDataFrame([], "url_hash long")
     admitted, _new_seen = admit(frontier, seen)
@@ -48,7 +49,10 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         "host", F.lit(8).cast("long").alias("budget"), F.lit(8).cast("long").alias("rate_per_round")
     )
     scheduled = schedule_cut(allowed, budget_caps(init_budget_state(budgets)))
-    return global_rank(
-        scheduled.select("url", "url_canon", "host", "priority", "seq", "host_rank"),
-        ["priority", "host", "seq"],
-    )
+    return scheduled.select("url", "url_canon", "host", "priority", "seq", "host_rank")
+
+
+def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The scheduled batch, ranked and materialized (a one-shot call:
+    it leaves nothing pinned)."""
+    return global_rank(scheduled_batch(spark, sf_dir), ["priority", "host", "seq"], eager_release=True)

@@ -28,20 +28,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cola_spark.functions.urls import canonicalize_url, host_of, path_of, url_hash_col
+from cola_spark.session import _PINNED, pin
 
 FRONTIER_COLS = [
     "url", "url_canon", "url_hash", "host", "path",
     "priority", "seq", "force", "error_times",
 ]
 
-_PERSISTED: list = []  # cogroup results cached within a round; see release_persisted
-
-
-def release_persisted() -> None:
-    """Unpersist caches created by admit_filtered (called per round by
-    the scheduler once the round's writes have materialized)."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
+_PERSISTED = _PINNED  # perfbench's tracer reads admit_filtered's cogroup result as _PERSISTED[-1]
 
 
 def prepare_frontier(raw: DataFrame) -> DataFrame:
@@ -166,12 +160,11 @@ def admit_filtered(
         out["blob"] = None
         return pd.concat([out, blob_row], ignore_index=True)
 
-    res = (
+    res = pin(  # consumed by 2-3 branches below; deterministic either way
         cand.groupBy("part")
         .cogroup(filters.groupBy("part"))
         .applyInPandas(per_part, out_schema)
-    ).persist()  # consumed by 2-3 branches below; deterministic either way
-    _PERSISTED.append(res)
+    )
     new_filters = res.filter(F.col("blob").isNotNull()).select("part", "blob")
     sure = res.filter(F.col("blob").isNull() & ~F.col("suspect")).select(*FRONTIER_COLS)
     if drop_suspects:

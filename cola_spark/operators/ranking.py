@@ -23,8 +23,9 @@ nondeterministic tag blocks exchange reuse under AQE) — measured: a
 20k-row two-subtree plan produced non-permutation ranks. The fix is to
 persist() the ranged projection: one RDD instance → the bounds are
 sampled exactly once and both subtrees read identical partitions.
-Persisted handles are tracked in _PERSISTED; callers that loop (the
-scheduler) release them via release_persisted().
+The persisted projection is pinned through cola_spark.session: the
+round's loop driver releases it, or a one-shot call materializes the
+result and frees it at once.
 """
 
 from __future__ import annotations
@@ -32,13 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_PERSISTED: list = []
-
-
-def release_persisted() -> None:
-    """Unpersist the pinned range-partitioned intermediates."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
+from cola_spark.session import materialize, pin
 
 
 def global_rank(
@@ -52,23 +47,18 @@ def global_rank(
     stage moves more than 1/P of the rows through one task.
 
     eager_release=False (default): the ranged intermediate stays pinned
-    in _PERSISTED and the caller releases it via release_persisted()
-    once the (lazy) result is materialized — the loop-driver protocol
-    (scheduler releases per round). eager_release=True: materialize the
-    result now (localCheckpoint — its blocks are ContextCleaner-managed,
-    freed when the result is GC'd) and unpersist the ranged frame before
-    returning, so repeated one-shot invocations (driver gate, bench
-    loops) never accumulate pinned cache entries.
+    until the caller's ``session.release()`` once the (lazy) result is
+    materialized — the loop-driver protocol (the scheduler releases per
+    round). eager_release=True: ``session.materialize`` the result now
+    and free the ranged frame before returning, so repeated one-shot
+    invocations (driver gate, bench loops) never accumulate pins.
     """
     spark = df.sparkSession
     parts = parts or int(spark.conf.get("spark.sql.shuffle.partitions"))
     key_cols = [F.col(k) for k in keys]
-    ranged = df.repartitionByRange(parts, *key_cols).withColumn(
-        "_pid", F.spark_partition_id()
+    ranged = pin(
+        df.repartitionByRange(parts, *key_cols).withColumn("_pid", F.spark_partition_id())
     )
-    ranged = ranged.persist()
-    if not eager_release:
-        _PERSISTED.append(ranged)
     counts = ranged.groupBy("_pid").agg(F.count("*").alias("_n"))
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.select(
@@ -81,7 +71,4 @@ def global_rank(
         .withColumn(out_col, (F.col("_off") + F.col("_lr")).cast("long"))
         .drop("_pid", "_lr", "_off")
     )
-    if eager_release:
-        out = out.localCheckpoint(eager=True)
-        ranged.unpersist()
-    return out
+    return materialize(out, [ranged]) if eager_release else out

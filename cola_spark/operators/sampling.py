@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cola_spark.operators.textdedup import hash_family
+from cola_spark.session import materialize
 
 
 def permille_bucket(key_col, hash_kind: str = "xxhash64", seed: str = "samp"):
@@ -99,8 +100,8 @@ def token_budget_mix(
     from the partition aggregates (a |P|x|sources|-row frame — config
     scale, broadcast). The ranged projection is persisted so both
     subtrees read ONE RangePartitioner sample (ranking.py's measured
-    determinism trap), then localCheckpoint + unpersist (the
-    eager_release protocol). Weights/budgets are a genuine config-size
+    determinism trap), then ``session.materialize``-d (the one-shot
+    close). Weights/budgets are a genuine config-size
     dim: broadcast joins are the rule here."""
     lay = _hash_layout(docs, id_col, source_col, text_col, hash_kind, seed, parts)
     bud = _budget_frame(docs.sparkSession, weights, budget_tokens)
@@ -186,9 +187,7 @@ def _hash_layout(
             (F.col("_tok_off") + F.col("_lc")).cast("long").alias("cum_before"),
         )
     )
-    out = out.localCheckpoint(eager=True)
-    ranged.unpersist()
-    return out
+    return materialize(out, [ranged])
 
 
 def epoch_repeat_mix(

@@ -13,56 +13,30 @@ bucket assignment is plain DataFrame joins/windows.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
 from cola_spark.operators.textdedup import spread_small_scan
+from cola_spark.session import memo
 
 _LSH_SEED = 42
 
 # Trained-quantizer memo: a trained codebook/centroid set is a pure
-# function of (corpus plan, geometry, iterations) and broadcast-sized
-# by construction, so train ONCE per session and rebuild from the
+# function of (corpus, geometry, iterations) and broadcast-sized by
+# construction, so train ONCE per session and rebuild from the
 # collected rows on reuse — the production shape (an index is trained
 # once, then served) and a real win in composed workloads (the refine
 # query otherwise re-runs the identical Lloyd loop the plain trained
-# query just ran). Keyed by a WEAK session reference (ADVICE r4 —
-# id() of a GC'd session can be recycled and alias a new session onto
-# stale entries) + semanticHash like textdedup._SPREAD_MEMO.
-#
-# CACHED PER PLAN, not per data: overwriting the files under an
-# unchanged plan in-session returns the stale trained quantizer —
-# call clear_trained_cache() after a data overwrite, or rebuild the
-# frame from a new path.
-import weakref
-
-_TRAINED_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def clear_trained_cache(spark: SparkSession | None = None) -> None:
-    """Explicit invalidation hook for data-overwrite workflows: drop
-    the trained-quantizer memo for `spark` (or every session)."""
-    if spark is None:
-        _TRAINED_MEMO.clear()
-    else:
-        _TRAINED_MEMO.pop(spark, None)
-
-
+# query just ran). ``session.memo`` keys it by the session and the
+# corpus's plan and files, so an overwritten corpus retrains.
 def _trained_memo(corpus: DataFrame, tag: str, params: tuple, build):
-    spark = corpus.sparkSession
-    per = _TRAINED_MEMO.setdefault(spark, {})
-    key = (corpus.semanticHash(), tag, params)
-    hit = per.get(key)
-    if hit is not None:
-        rows, schema = hit
-        return spark.createDataFrame(rows, schema)
-    df = build()
-    rows, schema = df.collect(), df.schema
-    if len(per) > 64:
-        per.clear()
-    per[key] = (rows, schema)
-    return spark.createDataFrame(rows, schema)
+    def _collect():
+        df = build()
+        return df.collect(), df.schema
+
+    rows, schema = memo(corpus, tag, params, _collect)
+    return corpus.sparkSession.createDataFrame(rows, schema)
 
 
 def _train_sample(corpus: DataFrame, id_col: str, train_permille: int) -> DataFrame:

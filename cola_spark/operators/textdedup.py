@@ -35,36 +35,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_PERSISTED: list = []  # shingle tables reused across pipeline branches
-
-
-def release_persisted() -> None:
-    """Unpersist shingle caches (loop drivers call this per iteration)."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PERSISTED.append(df)
-    return df
-
-
-def _finalize(result: DataFrame, handles: list, eager: bool) -> DataFrame:
-    """Close a pipeline over persisted intermediates. eager=False: pin
-    the handles in _PERSISTED for the caller's release_persisted() (the
-    loop-driver protocol). eager=True: materialize the (small) pair
-    result via localCheckpoint — blocks are ContextCleaner-managed, so
-    they free when the result is GC'd — and unpersist the shingle
-    caches immediately, so repeated one-shot invocations (driver gate,
-    bench loops) never accumulate pinned cache entries."""
-    if not eager:
-        _PERSISTED.extend(handles)
-        return result
-    out = result.localCheckpoint(eager=True)
-    for h in handles:
-        h.unpersist()
-    return out
+from cola_spark.session import materialize, memo
 
 
 def hash_family(kind: str = "xxhash64"):
@@ -83,15 +54,6 @@ def hash_family(kind: str = "xxhash64"):
     raise ValueError(f"unknown hash family {kind!r}")
 
 
-# Keyed by a WEAK session reference (ADVICE r4): id() of a GC'd session
-# can be reused by a new one, silently aliasing its cache entries; a
-# WeakKeyDictionary scopes entries to the live session object and drops
-# them with it. Values are {semanticHash: n_partitions} per session.
-import weakref
-
-_SPREAD_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def spread_small_scan(docs: DataFrame, key_col: str = "doc_id") -> DataFrame:
     """Spread a small-file scan across the cluster before CPU-heavy
     fan-out (shingle explode, per-token hashing). A sub-128MB parquet
@@ -103,21 +65,14 @@ def spread_small_scan(docs: DataFrame, key_col: str = "doc_id") -> DataFrame:
 
     The partition-count probe (`df.rdd.getNumPartitions()`) forces plan
     analysis + a DataFrame→RDD conversion on the driver, so it runs
-    ONCE per distinct source plan (memoized by semanticHash) — composed
-    queries like corpus_mix_clean build the same documents scan several
-    times per plan. Streaming frames have no .rdd and size their own
-    micro-batch partitions: pass-through."""
+    ONCE per distinct source (``session.memo``) — composed queries like
+    corpus_mix_clean build the same documents scan several times per
+    plan. Streaming frames have no .rdd and size their own micro-batch
+    partitions: pass-through."""
     if docs.isStreaming:
         return docs
     p = docs.sparkSession.sparkContext.defaultParallelism
-    per = _SPREAD_MEMO.setdefault(docs.sparkSession, {})
-    key = docs.semanticHash()
-    n = per.get(key)
-    if n is None:
-        if len(per) > 512:
-            per.clear()
-        n = docs.rdd.getNumPartitions()
-        per[key] = n
+    n = memo(docs, "spread", (), lambda: docs.rdd.getNumPartitions())
     if n >= p:
         return docs
     return docs.repartition(p, F.col(key_col))
@@ -358,14 +313,14 @@ def exact_jaccard(
 def minhash_dedup_pairs(
     docs: DataFrame, num_perm: int = 16, bands: int = 4,
     jaccard_num: int = 2, jaccard_den: int = 10, hash_kind: str = "xxhash64",
-    compress_bands: bool = True, eager_release: bool = False,
+    compress_bands: bool = True,
 ) -> DataFrame:
     """LSH candidates verified by exact Jaccard ≥ num/den.
 
     End-to-end near-dup pipeline: shingle → minhash → band-bucket join
     → candidate-pruned exact verify. Output (doc_a, doc_b, common, na,
     nb) matches q_ngram_jaccard_pairs' shape so the two are directly
-    comparable.
+    comparable. Returned materialized, with the shingle cache freed.
     """
     sh = shingles(docs).persist()  # reused: signatures + verify + sizes
     cand = lsh_candidate_pairs(
@@ -376,12 +331,11 @@ def minhash_dedup_pairs(
         F.col("common") * jaccard_den
         >= jaccard_num * (F.col("na") + F.col("nb") - F.col("common"))
     ).select("doc_a", "doc_b", "common", "na", "nb")
-    return _finalize(out, [sh], eager_release)
+    return materialize(out, [sh])
 
 
 def prefix_jaccard_pairs(
     docs: DataFrame, jaccard_num: int = 2, jaccard_den: int = 10, n: int = 3,
-    eager_release: bool = False,
 ) -> DataFrame:
     """(doc_a, doc_b, common, na, nb): EXACT Jaccard ≥ num/den pairs via
     prefix filtering (PPJoin-style) — same result set as the all-pairs
@@ -403,6 +357,8 @@ def prefix_jaccard_pairs(
     ceil((den-num)/den) fraction of each doc's shingles. The length
     filter least(na,nb)·(den+num) ≥ num·(na+nb) (integer-exact) prunes
     mismatched sizes before the pair ever materializes.
+
+    Returned materialized, with the shingle cache freed.
     """
     s = jaccard_num + jaccard_den
     # the shingle explode feeds four branches (freq, sizes, prefix rows,
@@ -453,7 +409,7 @@ def prefix_jaccard_pairs(
         F.col("common") * jaccard_den
         >= jaccard_num * (F.col("na") + F.col("nb") - F.col("common"))
     ).select("doc_a", "doc_b", "common", "na", "nb")
-    return _finalize(out, [sh], eager_release)
+    return materialize(out, [sh])
 
 
 # --------------------------------------------------------------- SimHash

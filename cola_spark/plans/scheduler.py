@@ -79,6 +79,7 @@ from cola_spark.operators.fetch import discover_links, synthetic_fetch
 from cola_spark.operators.priority import apply_global_cap, schedule_cut
 from cola_spark.operators.retry import split_retry
 from cola_spark.operators.robots import robots_gate
+from cola_spark.session import pin, release
 
 FRONTIER_SCHEMA = (
     "url string, url_canon string, url_hash long, host string, path string,"
@@ -227,152 +228,149 @@ def crawl_round(
     safe. Returns the state round ``rnd + 1`` starts from, or None when
     the round scheduled nothing (the crawl's natural stop)."""
     t0 = time.monotonic()
-    # 1. admission: the dedup gate on everything entering the frontier
-    seen = _read_seen(spark, cfg, state.live["seen"])
-    if cfg.dedup_mode == "exact":
-        admitted, _ns = admit(candidates, seen)
-        new_filters = None
-    else:
-        if cfg.filter_kind == "bloom":
-            from cola_spark.filters.bloom import BloomFilter as _fcls
-        elif cfg.filter_kind == "cuckoo":
-            _fcls = None  # admit_filtered defaults to CuckooFilter
+    try:
+        # 1. admission: the dedup gate on everything entering the frontier
+        seen = _read_seen(spark, cfg, state.live["seen"])
+        if cfg.dedup_mode == "exact":
+            admitted, _ns = admit(candidates, seen)
+            new_filters = None
         else:
-            raise ValueError(
-                f"filter_kind must be cuckoo|bloom, got {cfg.filter_kind!r}"
+            if cfg.filter_kind == "bloom":
+                from cola_spark.filters.bloom import BloomFilter as _fcls
+            elif cfg.filter_kind == "cuckoo":
+                _fcls = None  # admit_filtered defaults to CuckooFilter
+            else:
+                raise ValueError(
+                    f"filter_kind must be cuckoo|bloom, got {cfg.filter_kind!r}"
+                )
+            admitted, _ns, new_filters = admit_filtered(
+                candidates, seen, _read_filters(spark, cfg, state.live["filters"]),
+                n_parts=cfg.filter_parts, capacity_per_part=cfg.filter_capacity,
+                mode=cfg.dedup_mode, filter_cls=_fcls,
             )
-        admitted, _ns, new_filters = admit_filtered(
-            candidates, seen, _read_filters(spark, cfg, state.live["filters"]),
-            n_parts=cfg.filter_parts, capacity_per_part=cfg.filter_capacity,
-            mode=cfg.dedup_mode, filter_cls=_fcls,
+        admitted = pin(admitted)
+        # identical to the admit()-returned new-hash set, but derived
+        # from the persisted admitted so step 4 doesn't recompute admission
+        new_seen = admitted.filter(~F.col("force")).select("url_hash")
+
+        # 2-3. robots gate + this round's cut + fetch, fused into one job
+        pending_next = state.pending.unionByName(
+            robots_gate(admitted, robots, broadcast=cfg.broadcast_caps)
         )
-    admitted = admitted.persist()
-    # identical to the admit()-returned new-hash set, but derived
-    # from the persisted admitted so step 4 doesn't recompute admission
-    new_seen = admitted.filter(~F.col("force")).select("url_hash")
-
-    # 2-3. robots gate + this round's cut + fetch, fused into one job
-    pending_next = state.pending.unionByName(
-        robots_gate(admitted, robots, broadcast=cfg.broadcast_caps)
-    )
-    caps = budget_caps(state.budget, cfg.adaptive)
-    scheduled = apply_global_cap(
-        schedule_cut(
-            pending_next, caps,
-            cfg.salt_buckets, broadcast_caps=cfg.broadcast_caps,
-        ),
-        cfg.global_cap,
-    )
-    if cfg.decode and cfg.fetch_mode == "fused":
-        from cola_spark.operators.fetch import fetch_decode_verify, fused_parts
-
-        # exact upper bound on this round's scheduled rows: the
-        # ledger's cap sum (tiny agg on the broadcast-size budget
-        # state), further clamped by the global cap — sizes the
-        # Python stage instead of a fixed partition constant
-        bound = caps.agg(F.sum("cap")).first()[0] or 0
-        if cfg.global_cap is not None:
-            bound = min(int(bound), cfg.global_cap)
-        fetched = fetch_decode_verify(
-            scheduled, cfg.n_images,
-            parts=fused_parts(int(bound), spark.sparkContext.defaultParallelism),
-            carry_all=True,
+        caps = budget_caps(state.budget, cfg.adaptive)
+        scheduled = apply_global_cap(
+            schedule_cut(
+                pending_next, caps,
+                cfg.salt_buckets, broadcast_caps=cfg.broadcast_caps,
+            ),
+            cfg.global_cap,
         )
-    else:
-        fetched = synthetic_fetch(scheduled, images, cfg.n_images, decode=cfg.decode)
-    obs = Observation(f"round_{rnd}")
-    fetched = fetched.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_scheduled"),
-        F.sum(F.col("fetch_ok").cast("long")).alias("n_ok"),
-    )
-    log_cols = ["round", *FRONTIER_COLS, "host_rank", "image_id", "fetch_ok"]
-    if cfg.decode:
-        log_cols += ["fmt", "psnr", "invariant_ok"]
-    t_log0 = time.monotonic()
-    fetched.withColumn("round", F.lit(rnd)).select(*log_cols).write.mode(
-        "overwrite"
-    ).parquet(_p(cfg, "log", f"round={rnd}"))
-    t_log = time.monotonic() - t_log0
-    n_scheduled = obs.get["n_scheduled"]
-    stopped = n_scheduled == 0
+        if cfg.decode and cfg.fetch_mode == "fused":
+            from cola_spark.operators.fetch import fetch_decode_verify, fused_parts
 
-    # 4+5. persist dedup deltas + carry-over frontier + ledger.
-    # The four state writes are independent given the materialized
-    # log, so they run CONCURRENTLY (separate driver threads →
-    # separate Spark jobs): the per-round commit barrier costs
-    # max(write) instead of sum(write) — this is what made
-    # crawl_5rounds anti-scale 8→32 at sandbox SF. Seen deltas are
-    # written ALSO on natural stop: the oracle adds admissions to
-    # seen during admission, *before* its stop check — a stop round
-    # can admit (robots-blocked / over-cap) rows that must still be
-    # remembered, or a resume would re-admit them.
-    from concurrent.futures import ThreadPoolExecutor
+            # exact upper bound on this round's scheduled rows: the
+            # ledger's cap sum (tiny agg on the broadcast-size budget
+            # state), further clamped by the global cap — sizes the
+            # Python stage instead of a fixed partition constant
+            bound = caps.agg(F.sum("cap")).first()[0] or 0
+            if cfg.global_cap is not None:
+                bound = min(int(bound), cfg.global_cap)
+            fetched = fetch_decode_verify(
+                scheduled, cfg.n_images,
+                parts=fused_parts(int(bound), spark.sparkContext.defaultParallelism),
+                carry_all=True,
+            )
+        else:
+            fetched = synthetic_fetch(scheduled, images, cfg.n_images, decode=cfg.decode)
+        obs = Observation(f"round_{rnd}")
+        fetched = fetched.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_scheduled"),
+            F.sum(F.col("fetch_ok").cast("long")).alias("n_ok"),
+        )
+        log_cols = ["round", *FRONTIER_COLS, "host_rank", "image_id", "fetch_ok"]
+        if cfg.decode:
+            log_cols += ["fmt", "psnr", "invariant_ok"]
+        t_log0 = time.monotonic()
+        fetched.withColumn("round", F.lit(rnd)).select(*log_cols).write.mode(
+            "overwrite"
+        ).parquet(_p(cfg, "log", f"round={rnd}"))
+        t_log = time.monotonic() - t_log0
+        n_scheduled = obs.get["n_scheduled"]
+        stopped = n_scheduled == 0
 
-    log_r = spark.read.parquet(_p(cfg, "log", f"round={rnd}"))
-    from cola_spark.operators.budget import round_outcomes, update_budget_state_outcomes
+        # 4+5. persist dedup deltas + carry-over frontier + ledger.
+        # The four state writes are independent given the materialized
+        # log, so they run CONCURRENTLY (separate driver threads →
+        # separate Spark jobs): the per-round commit barrier costs
+        # max(write) instead of sum(write) — this is what made
+        # crawl_5rounds anti-scale 8→32 at sandbox SF. Seen deltas are
+        # written ALSO on natural stop: the oracle adds admissions to
+        # seen during admission, *before* its stop check — a stop round
+        # can admit (robots-blocked / over-cap) rows that must still be
+        # remembered, or a resume would re-admit them.
+        from concurrent.futures import ThreadPoolExecutor
 
-    bstate = update_budget_state_outcomes(state.budget, round_outcomes(log_r))
-    writes = []
-    if cfg.dedup_mode != "cuckoo":
-        # no shuffle: every reader of seen shuffles it anyway, and
-        # compaction restores seen_parts; the coalesce caps the write
-        # at one wave (with AQE off admitted has every shuffle partition)
+        log_r = spark.read.parquet(_p(cfg, "log", f"round={rnd}"))
+        from cola_spark.operators.budget import round_outcomes, update_budget_state_outcomes
+
+        bstate = update_budget_state_outcomes(state.budget, round_outcomes(log_r))
+        writes = []
+        if cfg.dedup_mode != "cuckoo":
+            # no shuffle: every reader of seen shuffles it anyway, and
+            # compaction restores seen_parts; the coalesce caps the write
+            # at one wave (with AQE off admitted has every shuffle partition)
+            writes.append(
+                lambda: new_seen.coalesce(spark.sparkContext.defaultParallelism)
+                .write.mode("overwrite")
+                .parquet(_p(cfg, "seen", f"delta={rnd}"))
+            )
+        if new_filters is not None:
+            writes.append(
+                lambda: new_filters.withColumn("delta", F.lit(rnd))
+                .write.mode("overwrite")
+                .parquet(_p(cfg, "filters", f"delta={rnd}"))
+            )
         writes.append(
-            lambda: new_seen.coalesce(spark.sparkContext.defaultParallelism)
+            lambda: pending_next.join(log_r.select("seq"), "seq", "left_anti")
             .write.mode("overwrite")
-            .parquet(_p(cfg, "seen", f"delta={rnd}"))
+            .parquet(_p(cfg, "state", f"round={rnd}", "pending"))
         )
-    if new_filters is not None:
         writes.append(
-            lambda: new_filters.withColumn("delta", F.lit(rnd))
-            .write.mode("overwrite")
-            .parquet(_p(cfg, "filters", f"delta={rnd}"))
+            lambda: bstate.write.mode("overwrite").parquet(
+                _p(cfg, "state", f"round={rnd}", "budget")
+            )
         )
-    writes.append(
-        lambda: pending_next.join(log_r.select("seq"), "seq", "left_anti")
-        .write.mode("overwrite")
-        .parquet(_p(cfg, "state", f"round={rnd}", "pending"))
-    )
-    writes.append(
-        lambda: bstate.write.mode("overwrite").parquet(
-            _p(cfg, "state", f"round={rnd}", "budget")
+        t_st0 = time.monotonic()
+        with ThreadPoolExecutor(max_workers=len(writes)) as ex:
+            for fut in [ex.submit(w) for w in writes]:
+                fut.result()  # surface the first failure, after all joined
+        t_state = time.monotonic() - t_st0
+
+        # the round's deltas join the live lists only at the flip
+        delta = f"delta={rnd}"
+        live = {
+            "seen": state.live["seen"] + ([delta] if cfg.dedup_mode != "cuckoo" else []),
+            "filters": state.live["filters"] + ([delta] if new_filters is not None else []),
+        }
+        _commit_manifest(
+            cfg, rnd,
+            {
+                "round": rnd,
+                "scheduled": int(n_scheduled),
+                "fetched_ok": int(obs.get["n_ok"] or 0),
+                "stopped": stopped,
+                "secs": round(time.monotonic() - t0, 3),
+                # per-round stage metrics: the fused log job vs the
+                # concurrent state-commit barrier (the rest is admission
+                # planning + driver bookkeeping)
+                "log_secs": round(t_log, 3),
+                "state_secs": round(t_state, 3),
+            },
+            live,
         )
-    )
-    t_st0 = time.monotonic()
-    with ThreadPoolExecutor(max_workers=len(writes)) as ex:
-        for fut in [ex.submit(w) for w in writes]:
-            fut.result()  # surface the first failure, after all joined
-    t_state = time.monotonic() - t_st0
-
-    # the round's deltas join the live lists only at the flip
-    delta = f"delta={rnd}"
-    live = {
-        "seen": state.live["seen"] + ([delta] if cfg.dedup_mode != "cuckoo" else []),
-        "filters": state.live["filters"] + ([delta] if new_filters is not None else []),
-    }
-    _commit_manifest(
-        cfg, rnd,
-        {
-            "round": rnd,
-            "scheduled": int(n_scheduled),
-            "fetched_ok": int(obs.get["n_ok"] or 0),
-            "stopped": stopped,
-            "secs": round(time.monotonic() - t0, 3),
-            # per-round stage metrics: the fused log job vs the
-            # concurrent state-commit barrier (the rest is admission
-            # planning + driver bookkeeping)
-            "log_secs": round(t_log, 3),
-            "state_secs": round(t_state, 3),
-        },
-        live,
-    )
-    admitted.unpersist()
-    from cola_spark.operators.dedup import release_persisted
-    from cola_spark.operators.ranking import release_persisted as release_ranked
-
-    release_persisted()
-    release_ranked()  # per-round global-cap rank caches
+    finally:
+        release()  # the round's pins, also when the round raises
     # the stop round is a fully committed round (log/seen/state all
     # written, manifest points at rnd >= 0) — a resume reads the flag
     # and returns instead of replaying empty rounds
@@ -418,9 +416,7 @@ def crawl_log(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
         if cfg.decode:
             schema += ", fmt string, psnr double, invariant_ok boolean"
         return spark.createDataFrame([], schema + ", global_rank long")
-    log = spark.read.option("basePath", _p(cfg, "log")).parquet(
-        *[_p(cfg, "log", f"round={r}") for r in range(rnd + 1)]
-    )
+    log = spark.read.parquet(*[_p(cfg, "log", f"round={r}") for r in range(rnd + 1)])
     # eager_release: crawl_log is a one-shot artifact call (end of
     # run_crawl, gate, bench) — don't leave the ranged frame pinned
     return global_rank(log, ["round", "priority", "host", "seq"], eager_release=True)

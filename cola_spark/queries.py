@@ -26,42 +26,27 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cola_spark.session import materialize, memo
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# Near-dup pair list, computed ONCE per (session, corpus dir) and
+# Near-dup pair list, computed ONCE per (session, documents input) and
 # shared by every consumer (the prefix query itself, dedup_clusters,
 # corpus_clean, the corpus mixes): prefix_jaccard_pairs returns an
 # eagerly-materialized (localCheckpoint) frame, so handing consumers
 # the SAME object means they read its blocks instead of re-running the
 # whole shingle→prefix→verify pipeline — the production shape (a
 # corpus snapshot's pair list is built once, then consumed by keep-set,
-# clustering and mix stages). Same session-scoped weak keying and the
-# same staleness caveat as similarity._TRAINED_MEMO: overwriting the
-# files in-session requires clear_shared_pairs().
-import weakref
-
-_SHARED_PAIRS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def clear_shared_pairs(spark: SparkSession | None = None) -> None:
-    if spark is None:
-        _SHARED_PAIRS.clear()
-    else:
-        _SHARED_PAIRS.pop(spark, None)
-
-
+# clustering and mix stages). ``session.memo`` keys it by the documents
+# frame's plan and files, so an overwritten corpus recomputes.
 def shared_prefix_pairs(spark, sf) -> DataFrame:
-    per = _SHARED_PAIRS.setdefault(spark, {})
-    df = per.get(sf)
-    if df is None:
-        from cola_spark.operators.textdedup import prefix_jaccard_pairs
+    from cola_spark.operators.textdedup import prefix_jaccard_pairs
 
-        df = prefix_jaccard_pairs(_t(spark, sf, "documents"), eager_release=True)
-        per[sf] = df
-    return df
+    docs = _t(spark, sf, "documents")
+    return memo(docs, "prefix_pairs", (), lambda: prefix_jaccard_pairs(docs))
 
 
 # ---------------------------------------------------------------- scheduler ops
@@ -446,10 +431,8 @@ def _shingles(doc):
 
 def q_ngram_jaccard_pairs(spark, sf):
     """Near-dup detection: exact word-3-gram Jaccard ≥ 0.2 pairs."""
-    from cola_spark.operators.textdedup import _finalize
-
     # the shingle explode feeds the self-join (twice) + the size agg;
-    # eager _finalize below frees it once the pair list materializes;
+    # materialize below frees it once the pair list is computed;
     # the scan is spread first or the explode runs on one core
     from cola_spark.operators.textdedup import spread_small_scan
 
@@ -469,7 +452,7 @@ def q_ngram_jaccard_pairs(spark, sf):
         .filter(F.col("common") * 10 >= 2 * (F.col("na") + F.col("nb") - F.col("common")))
         .select("doc_a", "doc_b", "common", "na", "nb")
     )
-    return _finalize(out, [sh], eager=True)
+    return materialize(out, [sh])
 
 
 SQL_JACCARD = r"""
@@ -786,8 +769,7 @@ def q_minhash_lsh_pairs(spark, sf):
     from cola_spark.operators.textdedup import minhash_dedup_pairs
 
     return minhash_dedup_pairs(
-        _t(spark, sf, "documents"), hash_kind="md5", compress_bands=False,
-        eager_release=True,
+        _t(spark, sf, "documents"), hash_kind="md5", compress_bands=False
     )
 
 

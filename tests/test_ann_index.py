@@ -6,9 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from cola_spark.operators.ann_index import load_ann_index, save_ann_index
-from cola_spark.operators.similarity import (
-    _TRAINED_MEMO, brute_force_topk, ivfpq_topk, pq_topk,
-)
+from cola_spark.operators.similarity import brute_force_topk, ivfpq_topk, pq_topk
+from cola_spark.session import _MEMO
 from cola_spark.stateio import LocalStateIO, ObjectStoreStateIO
 
 SF = "/root/testdata/sf0.001"
@@ -45,8 +44,8 @@ def test_save_load_serve_pq_exact_match(spark, emb, tmp_path):
     q2 = fresh.read.parquet(f"{SF}/embeddings.parquet").filter(F.col("vec_id") < 10)
     assert _trips(idx.topk(q2, k=5)) == want_adc
     assert _trips(idx.topk(q2, k=5, rerank=30)) == want_ref
-    # zero retraining: the fresh session never populated the Lloyd memo
-    assert fresh not in _TRAINED_MEMO
+    # zero retraining: the fresh session never populated the session memo
+    assert fresh not in _MEMO
 
 
 def test_save_load_serve_ivfpq_on_objectstore(spark, emb, tmp_path):

@@ -122,19 +122,22 @@ def _crash_in_barrier(monkeypatch):
     ids=["exact-local", "hybrid-local", "exact-objectstore"],
 )
 def test_resume_after_crash_before_flip(
-    spark, inputs, exact_ref, hybrid_ref, tmp_path, monkeypatch, crash, mode, io_cls
+    spark, inputs, exact_ref, hybrid_ref, tmp_path, monkeypatch, named_rdds, crash, mode, io_cls
 ):
     """A crash after round 2's seen/filter deltas landed but before its
-    manifest flip leaves orphan deltas; resume must not dedup against
-    them and must reproduce the straight run row for row."""
+    manifest flip leaves orphan deltas and no persisted frame; resume
+    must not dedup against the deltas and must reproduce the straight
+    run row for row."""
     kw = HYBRID if mode == "hybrid" else {}
     cfg = _cfg(str(tmp_path / "wd"), io=io_cls(), **kw)
     if crash == "flip":
         cfg.io = _crash_at_flip(io_cls)
     else:
         _crash_in_barrier(monkeypatch)
+    before = named_rdds()
     with pytest.raises(InjectedCrash):
         run_crawl(spark, *inputs, cfg)
+    assert named_rdds() - before == set(), "the crashed round left persisted frames"
     monkeypatch.undo()
     cfg.io = io_cls()
     assert latest_round(cfg) == CRASH_ROUND - 1

@@ -66,10 +66,16 @@ def test_no_rowscale_single_partition_exchange(data):
 
 
 def test_flagship_plan_has_no_rowscale_single_partition(spark):
-    from cola_spark.flagship import flagship
+    # flagship() returns its result materialized; check the lazy plan
+    # it computes (the same composition, its range frame pinned)
+    from cola_spark.flagship import scheduled_batch
+    from cola_spark.session import release
 
-    df = flagship(spark, "/root/testdata/sf0.001")
-    assert _single_partition_exchanges_feed_only_aggregates(df)
+    df = global_rank(scheduled_batch(spark, "/root/testdata/sf0.001"), ["priority", "host", "seq"])
+    try:
+        assert _single_partition_exchanges_feed_only_aggregates(df)
+    finally:
+        release()
 
 
 def test_empty_and_single_row(spark):
