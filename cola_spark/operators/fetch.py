@@ -135,20 +135,9 @@ def discover_links(fetched_ok: DataFrame, pages_per_host: int = 50) -> DataFrame
     )
 
 
-def fused_parts(row_bound: int, parallelism: int, rows_per_task: int = 150) -> int:
-    """Python-stage partition count derived from the scheduled-row upper
-    bound (the budget ledger's cap sum — exact, known before the job):
-    ~rows_per_task rows per task keeps decode tasks at a few hundred ms,
-    capped at 8× cluster parallelism so task count never explodes,
-    floored at 1. Data-derived rather than a constant: a fixed 128 is
-    2-rows-per-task scheduling overhead at small rounds and a hard
-    parallelism ceiling on a large cluster."""
-    return max(1, min((row_bound + rows_per_task - 1) // rows_per_task, 8 * parallelism))
-
-
 def fetch_decode_verify(
-    scheduled: DataFrame, n_images: int, dims: tuple = (16, 24, 32), parts: int = 128,
-    carry_all: bool = False,
+    scheduled: DataFrame, n_images: int, dims: tuple = (16, 24, 32),
+    parts: int | None = None, carry_all: bool = False,
 ) -> DataFrame:
     """Fused opener→decode→verify stage — the production-faithful fetch.
 
@@ -161,9 +150,17 @@ def fetch_decode_verify(
     from the url key (network stand-in), then decodes and checks the
     PSNR/caption invariant exactly like synthetic_fetch(decode=True).
 
-    Input is repartitioned evenly by seq first: the scheduled set
-    arrives partitioned by host (Zipf-skewed) from the budget cut, and
-    Python-stage stragglers on hot-host partitions destroy parallelism.
+    Input is repartitioned evenly by seq into ``parts`` tasks (default
+    None: the session's defaultParallelism, i.e. one wave of Python
+    tasks): the scheduled set arrives partitioned by host (Zipf-skewed)
+    from the budget cut, and Python-stage stragglers on hot-host
+    partitions destroy parallelism. One wave is the right size because
+    a row is cheap and a task is not: at local[4] one row costs ~0.35 ms
+    (md5, gen_pixels, encode, decode, PSNR) while one Python task costs
+    ~0.25 s whatever it holds, so extra waves add task overhead, not
+    throughput. A big round still streams: Arrow batching
+    (maxRecordsPerBatch) bounds a task's memory. The output rows do not
+    depend on ``parts``.
 
     carry_all=True keeps every input column (plus a JVM-side fetch_ok
     coin identical to synthetic_fetch's) so the stage is a drop-in
@@ -227,4 +224,6 @@ def fetch_decode_verify(
     else:
         schema = "url_canon string, host string, priority int, seq long"
     schema += ", image_id string, fmt string, psnr double, invariant_ok boolean"
+    if parts is None:
+        parts = scheduled.sparkSession.sparkContext.defaultParallelism
     return withkey.repartition(parts, F.col("seq")).mapInPandas(batches, schema)

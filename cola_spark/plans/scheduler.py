@@ -266,20 +266,10 @@ def crawl_round(
             cfg.global_cap,
         )
         if cfg.decode and cfg.fetch_mode == "fused":
-            from cola_spark.operators.fetch import fetch_decode_verify, fused_parts
+            from cola_spark.operators.fetch import fetch_decode_verify
 
-            # exact upper bound on this round's scheduled rows: the
-            # ledger's cap sum (tiny agg on the broadcast-size budget
-            # state), further clamped by the global cap — sizes the
-            # Python stage instead of a fixed partition constant
-            bound = caps.agg(F.sum("cap")).first()[0] or 0
-            if cfg.global_cap is not None:
-                bound = min(int(bound), cfg.global_cap)
-            fetched = fetch_decode_verify(
-                scheduled, cfg.n_images,
-                parts=fused_parts(int(bound), spark.sparkContext.defaultParallelism),
-                carry_all=True,
-            )
+            # parts defaults to defaultParallelism: one wave of Python tasks
+            fetched = fetch_decode_verify(scheduled, cfg.n_images, carry_all=True)
         else:
             fetched = synthetic_fetch(scheduled, images, cfg.n_images, decode=cfg.decode)
         obs = Observation(f"round_{rnd}")

@@ -97,19 +97,26 @@ def test_retries_present_and_bounded(crawl):
     assert retried.filter(F.col("error_times") >= 3).count() == 0
 
 
-def test_fused_parts_sizing():
-    """Data-derived Python-stage sizing: ~150 rows/task, floored at 1,
-    capped at 8x cluster parallelism (the bound is the budget ledger's
-    cap sum, so it is exact and known before the job)."""
-    from cola_spark.operators.fetch import fused_parts
+def test_fused_fetch_one_wave_and_partition_invariant(spark):
+    """The fused fetch stage runs one wave of Python tasks by default
+    (defaultParallelism partitions), and its rows do not depend on the
+    partition count."""
+    from cola_spark.operators.fetch import fetch_decode_verify
 
-    assert fused_parts(0, 32) == 1          # empty round still one task
-    assert fused_parts(1, 32) == 1
-    assert fused_parts(150, 32) == 1
-    assert fused_parts(151, 32) == 2        # ceil division
-    assert fused_parts(15_000, 32) == 100   # 150 rows/task
-    assert fused_parts(10**9, 32) == 256    # 8x parallelism cap
-    assert fused_parts(10**9, 1000) == 8000  # cap scales with the cluster
+    sched = spark.range(200).select(
+        F.format_string("http://h%d.example/p/%d", F.col("id") % 7, F.col("id")).alias("url_canon"),
+        F.format_string("h%d.example", F.col("id") % 7).alias("host"),
+        (F.col("id") % 3).cast("int").alias("priority"),
+        F.col("id").alias("seq"),
+    )
+    default = fetch_decode_verify(sched, N_IMAGES, carry_all=True)
+    assert default.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    one, seven = (
+        fetch_decode_verify(sched, N_IMAGES, parts=p, carry_all=True).orderBy("seq").collect()
+        for p in (1, 7)
+    )
+    assert len(one) == 200 and one == seven
+    assert any(r.fmt is not None for r in one), "no row was decoded"
 
 
 def test_crawl_rounds_oracled_loop_semantics(spark):
