@@ -21,6 +21,15 @@ URL can be dropped in filter-only mode, or routed to exact verification
 in hybrid mode) but never false-negatives — a seen URL is never
 re-admitted.
 
+Blob layout: ``BLF2`` or ``BLF1``, then (m_bits, count) as two
+little-endian int64, then the bit array. ``BLF2`` stores it as an
+occupancy bitmap over its bytes followed by the non-zero bytes;
+``BLF1`` stores it dense. ``to_bytes`` writes the shorter of the two
+(filters/sparse.py, the cuckoo blob's rule): at the default capacity
+64 KiB + at most K bytes per key instead of a fixed 512 KiB while the
+filter holds up to about half its capacity, the dense array beyond.
+``from_bytes`` reads both tags.
+
 Determinism: k fixed seeds into the splitmix64 finalizer, bit count a
 power of two fixed at construction; blob bytes are a pure function of
 the inserted key set (order-independent — OR is commutative).
@@ -32,7 +41,10 @@ import struct
 
 import numpy as np
 
-_MAGIC = b"BLF1"
+from cola_spark.filters.sparse import pack, unpack
+
+_MAGIC = b"BLF1"  # dense bit array
+_MAGIC_SPARSE = b"BLF2"  # occupancy bitmap over bytes + non-zero bytes
 K = 6  # hash functions; with ~12 bits/key -> FP ~ 0.5^6*... ≈ 0.4%
 _BITS_PER_KEY = 12
 # fixed odd seeds decorrelating the k probes (digits of pi/e mixes)
@@ -101,19 +113,20 @@ class BloomFilter:
 
     # --- serialization -----------------------------------------------------
     def to_bytes(self) -> bytes:
+        sparse, bits = pack(self.bits)
         return (
-            _MAGIC
+            (_MAGIC_SPARSE if sparse else _MAGIC)
             + struct.pack("<qq", self.m_bits, self.count)
-            + self.bits.tobytes()
+            + bits
         )
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "BloomFilter":
-        if data[:4] != _MAGIC:
+        if data[:4] not in (_MAGIC, _MAGIC_SPARSE):
             raise ValueError("not a bloom filter blob")
         m_bits, count = struct.unpack_from("<qq", data, 4)
         f = cls.__new__(cls)
         f.m_bits = m_bits
         f.count = count
-        f.bits = np.frombuffer(data, dtype=np.uint8, offset=4 + 16).copy()
+        f.bits, _ = unpack(data, 4 + 16, m_bits // 8, np.uint8, data[:4] == _MAGIC_SPARSE)
         return f

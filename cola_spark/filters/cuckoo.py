@@ -17,6 +17,17 @@ re-admitted). Overfull filters spill fingerprints... no — overfull
 filters spill exact *hashes* to a side array serialized with the blob,
 preserving the no-false-negative guarantee unconditionally.
 
+Blob layout: ``CKF2`` or ``CKF1``, then (n_buckets, count, n_spill) as
+three little-endian int64, then the slot table, then the sorted spilled
+hashes as int64. ``CKF2`` stores the table as an occupancy bitmap
+(one bit per slot) followed by the occupied 16-bit fingerprints;
+``CKF1`` stores it dense, 2 bytes per slot. ``to_bytes`` writes the
+shorter of the two (filters/sparse.py), so a blob costs
+n_slots/8 + 2 B per stored key until the table is ~94% full, and never
+more than the dense table: at the default capacity 64 KiB + 2 B/key
+instead of a fixed 1 MiB. ``from_bytes`` reads both tags, so a workdir
+written in the dense layout resumes.
+
 Determinism: hash mixing is fixed (splitmix64 constants), bucket count
 is a power of two fixed at construction, and callers insert in sorted
 key order — so blob bytes are a pure function of the key set.
@@ -31,7 +42,10 @@ import struct
 
 import numpy as np
 
-_MAGIC = b"CKF1"
+from cola_spark.filters.sparse import pack, unpack
+
+_MAGIC = b"CKF1"  # dense slot table
+_MAGIC_SPARSE = b"CKF2"  # occupancy bitmap + occupied fingerprints
 SLOTS = 4  # slots per bucket
 MAX_KICKS = 250
 
@@ -130,27 +144,23 @@ class CuckooFilter:
     def to_bytes(self) -> bytes:
         spill = np.fromiter(self.spill, dtype=np.int64, count=len(self.spill))
         spill.sort()
+        sparse, table = pack(self.table)
         return (
-            _MAGIC
+            (_MAGIC_SPARSE if sparse else _MAGIC)
             + struct.pack("<qqq", self.n_buckets, self.count, len(spill))
-            + self.table.tobytes()
+            + table
             + spill.tobytes()
         )
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "CuckooFilter":
-        if data[:4] != _MAGIC:
+        if data[:4] not in (_MAGIC, _MAGIC_SPARSE):
             raise ValueError("not a cuckoo filter blob")
         nb, count, n_spill = struct.unpack_from("<qqq", data, 4)
         f = cls.__new__(cls)
         f.n_buckets = nb
         f.count = count
-        off = 4 + 24
-        f.table = (
-            np.frombuffer(data, dtype=np.uint16, count=nb * SLOTS, offset=off)
-            .reshape(nb, SLOTS)
-            .copy()
-        )
-        off += nb * SLOTS * 2
-        f.spill = set(np.frombuffer(data, dtype=np.int64, offset=off).tolist())
+        table, off = unpack(data, 4 + 24, nb * SLOTS, np.uint16, data[:4] == _MAGIC_SPARSE)
+        f.table = table.reshape(nb, SLOTS)
+        f.spill = set(np.frombuffer(data, dtype=np.int64, count=n_spill, offset=off).tolist())
         return f

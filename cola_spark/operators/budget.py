@@ -24,9 +24,26 @@ from pyspark.sql import functions as F
 ERR_WINDOW = 3
 
 
+#: the ledger's columns, as init_budget_state builds them and
+#: update_budget_state_outcomes keeps them
+LEDGER_SCHEMA = (
+    "host string, budget long, rate_per_round long, applied long, finished long,"
+    " errored long, last_errored long, err_hist array<long>"
+)
+
+
 def init_budget_state(budgets: DataFrame) -> DataFrame:
+    """The unspent ledger of a budgets table (host, budget,
+    rate_per_round). Budget and rate are cast to long when they are not
+    (the generators' long columns keep their plan), so the ledger is
+    LEDGER_SCHEMA-typed whatever integer types the budgets carry."""
+    have = dict(budgets.dtypes)
     return budgets.select(
-        "host", "budget", "rate_per_round",
+        "host",
+        *[
+            c if have[c] == "bigint" else F.col(c).cast("long").alias(c)
+            for c in ("budget", "rate_per_round")
+        ],
         F.lit(0).cast("long").alias("applied"),
         F.lit(0).cast("long").alias("finished"),
         F.lit(0).cast("long").alias("errored"),

@@ -16,10 +16,15 @@ The anti-join is the exact-correctness oracle; the approximate fast
 path (partitioned cuckoo filter, cola's bloom analogue) lives in
 cola_spark.filters.cuckoo and prunes the anti-join input at scale.
 
-Scale notes: `seen` is the big table (10^10 rows design point). We keep
-it hash-partitioned by pmod(url_hash, P) on disk so the per-round
-anti-join shuffles only the (small) candidate side under AQE; the
-window partitions by url_hash — high cardinality, no skew.
+Scale notes: `seen` is the big table (10^10 rows design point). On disk
+it is plain parquet — round deltas written with the admitted frame's
+partitions, and compaction's pmod(url_hash, P) repartition is not a
+partitioning Spark can use on read — so the per-round anti-join
+shuffles BOTH sides (a SortMergeJoin with an Exchange over the whole
+seen set) unless the planner broadcasts a seen set under its broadcast
+threshold. Hybrid mode exists to keep that join's candidate side
+down to the filter's suspects. The min_by aggregate groups by url_hash
+— high cardinality, no skew.
 """
 
 from __future__ import annotations
@@ -30,10 +35,13 @@ from pyspark.sql import functions as F
 from cola_spark.functions.urls import canonicalize_url, host_of, path_of, url_hash_col
 from cola_spark.session import _PINNED, pin
 
-FRONTIER_COLS = [
-    "url", "url_canon", "url_hash", "host", "path",
-    "priority", "seq", "force", "error_times",
-]
+_FRONTIER_TYPES = {  # Spark's simpleString names, as DataFrame.dtypes reports them
+    "url": "string", "url_canon": "string", "url_hash": "bigint", "host": "string",
+    "path": "string", "priority": "int", "seq": "bigint", "force": "boolean",
+    "error_times": "int",
+}
+FRONTIER_COLS = list(_FRONTIER_TYPES)
+FRONTIER_SCHEMA = ", ".join(f"{c} {t}" for c, t in _FRONTIER_TYPES.items())
 
 _PERSISTED = _PINNED  # perfbench's tracer reads admit_filtered's cogroup result as _PERSISTED[-1]
 
@@ -52,7 +60,18 @@ def prepare_frontier(raw: DataFrame) -> DataFrame:
     )
     if "error_times" not in df.columns:
         df = df.withColumn("error_times", F.lit(0))
-    return df.select(*FRONTIER_COLS)
+    return as_frontier(df)
+
+
+def as_frontier(df: DataFrame) -> DataFrame:
+    """``df``'s frontier columns in FRONTIER_SCHEMA order and types: a
+    column of another type is cast (frontier-typed input keeps its
+    plan), so the crawl state read back under FRONTIER_SCHEMA holds
+    whatever integer types the seeds carried."""
+    have = dict(df.dtypes)
+    return df.select(*[
+        c if have[c] == t else F.col(c).cast(t).alias(c) for c, t in _FRONTIER_TYPES.items()
+    ])
 
 
 def admit(candidates: DataFrame, seen: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -122,11 +141,7 @@ def admit_filtered(
     if filter_cls is None:
         from cola_spark.filters.cuckoo import CuckooFilter as filter_cls
     cand = candidates.withColumn("part", F.pmod(F.col("url_hash"), F.lit(n_parts)).cast("int"))
-    out_schema = (
-        "url string, url_canon string, url_hash long, host string, path string,"
-        " priority int, seq long, force boolean, error_times int,"
-        " part int, suspect boolean, blob binary"
-    )
+    out_schema = FRONTIER_SCHEMA + ", part int, suspect boolean, blob binary"
     drop_suspects = mode == "cuckoo"
 
     def per_part(key, cand_pdf, filt_pdf):

@@ -43,6 +43,13 @@ Compaction (maintenance.py) commits through the same manifest. A
 round overwrites its outputs before it flips, so a resume and an
 at-least-once micro-batch replay are safe for the same reason.
 
+Every state read carries its schema (SEEN_SCHEMA, FILTERS_SCHEMA,
+FRONTIER_SCHEMA for pending, LEDGER_SCHEMA for the budget ledger,
+``_log_schema`` for the log), so building a round's inputs runs no
+schema-inference job; a fresh crawl's empty frames have no partitions
+and run no stage. The writers keep the files to those types:
+``prepare_frontier`` and ``init_budget_state`` cast their inputs.
+
 Determinism contract (the BASELINE order-match criterion): the global
 crawl order is the total order (round, priority, host, seq). Nothing
 depends on partition iteration order or parallelism, so the same seeds
@@ -68,9 +75,10 @@ from pyspark.sql import functions as F
 
 from cola_spark.stateio import DEFAULT_IO, StateIO
 
-from cola_spark.operators.budget import budget_caps, init_budget_state
+from cola_spark.operators.budget import LEDGER_SCHEMA, budget_caps, init_budget_state
 from cola_spark.operators.dedup import (
     FRONTIER_COLS,
+    FRONTIER_SCHEMA,
     admit,
     admit_filtered,
     prepare_frontier,
@@ -81,10 +89,10 @@ from cola_spark.operators.retry import split_retry
 from cola_spark.operators.robots import robots_gate
 from cola_spark.session import pin, release
 
-FRONTIER_SCHEMA = (
-    "url string, url_canon string, url_hash long, host string, path string,"
-    " priority int, seq long, force boolean, error_times int"
-)
+# the schemas every state read passes (pending: FRONTIER_SCHEMA, budget:
+# LEDGER_SCHEMA, log: _log_schema), so no read runs an inference job
+SEEN_SCHEMA = "url_hash long"
+FILTERS_SCHEMA = "part int, blob binary, delta int"
 
 
 @dataclass
@@ -139,25 +147,41 @@ def _commit_manifest(cfg: CrawlConfig, rnd: int, stats: dict, live: dict) -> Non
     )
 
 
+def _log_schema(cfg: CrawlConfig) -> str:
+    """The crawl log's columns in written order, with their types."""
+    schema = f"round int, {FRONTIER_SCHEMA}, host_rank int, image_id string, fetch_ok boolean"
+    return schema + (", fmt string, psnr double, invariant_ok boolean" if cfg.decode else "")
+
+
+def _read(spark: SparkSession, schema: str, *paths: str) -> DataFrame:
+    """Parquet under its declared schema: no schema-inference job."""
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def _empty(spark: SparkSession, schema: str) -> DataFrame:
+    """No rows and no partitions, so it runs no Spark stage (a frame
+    made from an empty local list runs a parallelize stage)."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
 def _read_seen(spark: SparkSession, cfg: CrawlConfig, live: list[str]) -> DataFrame:
     """The seen set over the live seen directories a manifest names."""
     if not live:
-        return spark.createDataFrame([], "url_hash long")
-    return spark.read.parquet(*[_p(cfg, "seen", d) for d in live]).select("url_hash")
+        return _empty(spark, SEEN_SCHEMA)
+    return _read(spark, SEEN_SCHEMA, *[_p(cfg, "seen", d) for d in live])
 
 
 def _read_filters(
     spark: SparkSession, cfg: CrawlConfig, live: list[str], with_delta: bool = False
 ) -> DataFrame:
     """Latest blob per part over the live filter directories."""
+    out_cols = ["part", "blob"] + (["delta"] if with_delta else [])
     if not live:
-        cols = "part int, blob binary" + (", delta int" if with_delta else "")
-        return spark.createDataFrame([], cols)
+        return _empty(spark, FILTERS_SCHEMA).select(*out_cols)
     from pyspark.sql import Window
 
-    df = spark.read.parquet(*[_p(cfg, "filters", d) for d in live])
+    df = _read(spark, FILTERS_SCHEMA, *[_p(cfg, "filters", d) for d in live])
     w = Window.partitionBy("part").orderBy(F.desc("delta"))
-    out_cols = ["part", "blob"] + (["delta"] if with_delta else [])
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -168,7 +192,7 @@ def _read_filters(
 def _derive_candidates(spark: SparkSession, cfg: CrawlConfig, prev_round: int) -> DataFrame:
     """Children + retries of round r-1, recomputed from the materialized
     log (cheap, deterministic, resume-safe)."""
-    log = spark.read.parquet(_p(cfg, "log", f"round={prev_round}"))
+    log = _read(spark, _log_schema(cfg), _p(cfg, "log", f"round={prev_round}"))
     requeue, _dropped = split_retry(
         log.filter(~F.col("fetch_ok")).select(*FRONTIER_COLS), cfg.max_retries
     )
@@ -190,8 +214,8 @@ class RoundState:
 
 def _read_state(spark: SparkSession, cfg: CrawlConfig, rnd: int, live: dict) -> RoundState:
     return RoundState(
-        spark.read.parquet(_p(cfg, "state", f"round={rnd}", "pending")),
-        spark.read.parquet(_p(cfg, "state", f"round={rnd}", "budget")),
+        _read(spark, FRONTIER_SCHEMA, _p(cfg, "state", f"round={rnd}", "pending")),
+        _read(spark, LEDGER_SCHEMA, _p(cfg, "state", f"round={rnd}", "budget")),
         live,
     )
 
@@ -208,7 +232,7 @@ def _start_state(
     if m is None:
         cfg.io.makedirs(cfg.workdir)
         return RoundState(
-            spark.createDataFrame([], FRONTIER_SCHEMA),
+            _empty(spark, FRONTIER_SCHEMA),
             init_budget_state(budgets),
             {"seen": [], "filters": []},
         )
@@ -278,9 +302,7 @@ def crawl_round(
             F.count(F.lit(1)).alias("n_scheduled"),
             F.sum(F.col("fetch_ok").cast("long")).alias("n_ok"),
         )
-        log_cols = ["round", *FRONTIER_COLS, "host_rank", "image_id", "fetch_ok"]
-        if cfg.decode:
-            log_cols += ["fmt", "psnr", "invariant_ok"]
+        log_cols = [f.split()[0] for f in _log_schema(cfg).split(",")]
         t_log0 = time.monotonic()
         fetched.withColumn("round", F.lit(rnd)).select(*log_cols).write.mode(
             "overwrite"
@@ -301,7 +323,7 @@ def crawl_round(
         # remembered, or a resume would re-admit them.
         from concurrent.futures import ThreadPoolExecutor
 
-        log_r = spark.read.parquet(_p(cfg, "log", f"round={rnd}"))
+        log_r = _read(spark, _log_schema(cfg), _p(cfg, "log", f"round={rnd}"))
         from cola_spark.operators.budget import round_outcomes, update_budget_state_outcomes
 
         bstate = update_budget_state_outcomes(state.budget, round_outcomes(log_r))
@@ -402,11 +424,8 @@ def crawl_log(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
 
     rnd = latest_round(cfg)
     if rnd is None:
-        schema = FRONTIER_SCHEMA + ", round int, host_rank int, image_id string, fetch_ok boolean"
-        if cfg.decode:
-            schema += ", fmt string, psnr double, invariant_ok boolean"
-        return spark.createDataFrame([], schema + ", global_rank long")
-    log = spark.read.parquet(*[_p(cfg, "log", f"round={r}") for r in range(rnd + 1)])
+        return _empty(spark, _log_schema(cfg) + ", global_rank long")
+    log = _read(spark, _log_schema(cfg), *[_p(cfg, "log", f"round={r}") for r in range(rnd + 1)])
     # eager_release: crawl_log is a one-shot artifact call (end of
     # run_crawl, gate, bench) — don't leave the ranged frame pinned
     return global_rank(log, ["round", "priority", "host", "seq"], eager_release=True)
@@ -415,9 +434,5 @@ def crawl_log(spark: SparkSession, cfg: CrawlConfig) -> DataFrame:
 def final_state(spark: SparkSession, cfg: CrawlConfig):
     """(pending, seen, budget_state) at the last committed round."""
     m = _manifest(cfg)
-    rnd = m["round"]
-    return (
-        spark.read.parquet(_p(cfg, "state", f"round={rnd}", "pending")),
-        _read_seen(spark, cfg, m["seen"]),
-        spark.read.parquet(_p(cfg, "state", f"round={rnd}", "budget")),
-    )
+    state = _read_state(spark, cfg, m["round"], {})
+    return state.pending, _read_seen(spark, cfg, m["seen"]), state.budget

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cola_spark.operators.dedup import FRONTIER_COLS
+from cola_spark.operators.dedup import as_frontier
 from cola_spark.plans.scheduler import (
     CrawlConfig, _derive_candidates, _manifest, _start_state, crawl_round,
 )
@@ -56,7 +56,7 @@ class ForeachBatchCrawler:
             raise ValueError(
                 f"micro-batch {batch_id} does not follow committed round {last}"
             )
-        candidates = batch_df.select(*FRONTIER_COLS)
+        candidates = as_frontier(batch_df)
         if batch_id > 0:
             candidates = candidates.unionByName(
                 _derive_candidates(self.spark, self.cfg, batch_id - 1)

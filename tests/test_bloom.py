@@ -6,6 +6,8 @@ bloom gate (the DuckDB-oracled form) upholds never-false-negative and
 agrees between the md5 and xxhash64 hash families on plan shape.
 """
 
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -57,6 +59,34 @@ def test_cross_class_blob_refused():
     g.add(np.array([1, 2, 3], dtype=np.int64))
     with pytest.raises(ValueError):
         BloomFilter.from_bytes(g.to_bytes())
+
+
+def _dense_blob(f):
+    """The dense ``BLF1`` layout, built by hand: header, the whole bit array."""
+    return b"BLF1" + struct.pack("<qq", f.m_bits, f.count) + f.bits.tobytes()
+
+
+@pytest.mark.parametrize(
+    "n_keys,tag",
+    [(0, b"BLF2"), (80, b"BLF2"), (300, b"BLF2"), (1000, b"BLF1"), (4000, b"BLF1")],
+    ids=["empty", "low-load", "mid-load", "at-capacity", "overfull"],
+)
+def test_blob_roundtrip_sized_by_keys(n_keys, tag):
+    """The bit array is stored sparse (byte bitmap + non-zero bytes)
+    while that is shorter — up to about half the capacity at 12
+    bits/key — and dense beyond; both round-trip exactly."""
+    keys = _keys(n_keys, 5) if n_keys else np.array([], dtype=np.int64)
+    f = BloomFilter(1000)
+    f.add(keys)
+    probe = _keys(20_000, 6)
+    blob = f.to_bytes()
+    assert blob[:4] == tag and len(blob) <= 20 + f.m_bits // 8
+    for g in (BloomFilter.from_bytes(blob), BloomFilter.from_bytes(_dense_blob(f))):
+        assert np.array_equal(g.bits, f.bits) and g.bits.dtype == f.bits.dtype
+        assert g.m_bits == f.m_bits and g.count == f.count
+        assert g.contains(keys).all()
+        assert np.array_equal(g.contains(probe), f.contains(probe))
+        assert g.to_bytes() == blob
 
 
 def test_empty_and_single():

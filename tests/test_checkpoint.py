@@ -64,7 +64,9 @@ def exact_ref(spark, inputs, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def hybrid_ref(spark, inputs, tmp_path_factory):
-    return _run(spark, inputs, str(tmp_path_factory.mktemp("hybrid")), **HYBRID)[0]
+    """The straight hybrid-mode run: (rows, its finished workdir)."""
+    rows, cfg = _run(spark, inputs, str(tmp_path_factory.mktemp("hybrid")), **HYBRID)
+    return rows, cfg.workdir
 
 
 def test_resume_reproduces_full_run(spark, inputs, exact_ref, tmp_path_factory):
@@ -143,7 +145,7 @@ def test_resume_after_crash_before_flip(
     assert latest_round(cfg) == CRASH_ROUND - 1
     assert os.path.isdir(os.path.join(cfg.workdir, "seen", f"delta={CRASH_ROUND}"))
     log = run_crawl(spark, *inputs, cfg, resume=True)
-    assert _rows(log) == (hybrid_ref if mode == "hybrid" else exact_ref[0])
+    assert _rows(log) == (hybrid_ref if mode == "hybrid" else exact_ref)[0]
 
 
 def test_natural_stop_commits_final_admissions(spark, tmp_path_factory):
@@ -207,7 +209,55 @@ def test_stop_at_round_zero_is_resumable(spark, tmp_path_factory):
 
 
 def test_hybrid_mode_identical_to_exact(exact_ref, hybrid_ref):
-    assert hybrid_ref == exact_ref[0]
+    assert hybrid_ref[0] == exact_ref[0]
+
+
+def test_state_readers_start_no_job(spark, inputs, hybrid_ref, tmp_path):
+    """Every state read carries its schema, so building a round's inputs
+    from a committed hybrid workdir runs no Spark job; a fresh crawl's
+    empty frames have no partitions, so they run no stage either."""
+    from cola_spark.plans.scheduler import (
+        _derive_candidates, _manifest, _read_filters, _read_seen, _read_state, _start_state,
+    )
+
+    cfg = _cfg(hybrid_ref[1], **HYBRID)
+    m = _manifest(cfg)
+    assert m["round"] >= 1 and m["seen"] and m["filters"]
+    sc, group = spark.sparkContext, "readers-start-no-job"
+    sc.setJobGroup(group, group)
+    try:
+        _read_state(spark, cfg, m["round"], {})
+        _derive_candidates(spark, cfg, m["round"])
+        _read_seen(spark, cfg, m["seen"])
+        _read_filters(spark, cfg, m["filters"])
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    fresh = _cfg(str(tmp_path / "fresh"), **HYBRID)
+    empty = [
+        _read_seen(spark, fresh, []),
+        _read_filters(spark, fresh, []),
+        _start_state(spark, fresh, inputs[2], None).pending,
+        crawl_log(spark, fresh),
+    ]
+    assert [f.rdd.getNumPartitions() for f in empty] == [0, 0, 0, 0]
+
+
+def test_input_types_do_not_change_the_log(spark, inputs, exact_ref, tmp_path):
+    """The state is read back under fixed schemas, so seeds carrying
+    priority as long and budgets carrying int columns must crawl exactly
+    like the default-typed inputs: the same rows (those of the straight
+    run's first two rounds) under the same log schema."""
+    seeds, robots, budgets, images = inputs
+    seeds = seeds.withColumn("priority", F.col("priority").cast("long"))
+    budgets = budgets.select(
+        "host", *[F.col(c).cast("int").alias(c) for c in ("budget", "rate_per_round")]
+    )
+    cfg = _cfg(str(tmp_path / "typed"), max_rounds=2)
+    log = run_crawl(spark, seeds, robots, budgets, images, cfg)
+    assert _rows(log) == [r for r in exact_ref[0] if r[0] < 2]
+    assert log.schema == crawl_log(spark, _cfg(exact_ref[1])).schema
 
 
 def test_cuckoo_mode_bloom_semantics(spark, inputs, exact_ref, tmp_path_factory):

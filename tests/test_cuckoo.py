@@ -1,6 +1,9 @@
 """Cuckoo-filter invariants, mirroring cola's bloom tests
 (tests/test_bloom_filter.py): no false negatives ever, FP rate below
-bound, deterministic serialization, overfull spill safety."""
+bound, deterministic serialization, overfull spill safety, blobs sized
+by their keys and dense blobs still readable."""
+
+import struct
 
 import numpy as np
 import pytest
@@ -60,3 +63,43 @@ def test_membership_property(xs):
     arr = np.sort(np.array(xs, dtype=np.int64)) if xs else np.array([], dtype=np.int64)
     f.add(arr)
     assert f.contains(arr).all()
+
+
+def _dense_blob(f):
+    """The dense ``CKF1`` layout, built by hand: header, the whole slot
+    table, the sorted spilled hashes."""
+    spill = np.array(sorted(f.spill), dtype=np.int64)
+    return (
+        b"CKF1" + struct.pack("<qqq", f.n_buckets, f.count, len(spill))
+        + f.table.tobytes() + spill.tobytes()
+    )
+
+
+@pytest.mark.parametrize(
+    "n_keys,capacity,tag",
+    [(0, 1000, b"CKF2"), (80, 1000, b"CKF2"), (1800, 1000, b"CKF2"), (4000, 1000, b"CKF1")],
+    ids=["empty", "low-load", "high-load", "overfull-spill"],
+)
+def test_blob_roundtrip_sized_by_keys(n_keys, capacity, tag):
+    keys = np.sort(_keys(n_keys, 5)) if n_keys else np.array([], dtype=np.int64)
+    f = CuckooFilter(capacity)
+    f.add(keys)
+    assert (len(f.spill) > 0) == (tag == b"CKF1"), "only the overfull case spills"
+    probe = _keys(20_000, 6)
+    blob = f.to_bytes()
+    dense = 28 + 2 * f.table.size + 8 * len(f.spill)
+    assert blob[:4] == tag and len(blob) <= dense
+    for g in (CuckooFilter.from_bytes(blob), CuckooFilter.from_bytes(_dense_blob(f))):
+        assert np.array_equal(g.table, f.table) and g.table.dtype == f.table.dtype
+        assert g.spill == f.spill and g.count == f.count and g.n_buckets == f.n_buckets
+        assert g.contains(keys).all()
+        assert np.array_equal(g.contains(probe), f.contains(probe))
+        assert g.to_bytes() == blob
+
+
+def test_default_capacity_blob_holds_bitmap_plus_keys():
+    """At the default per-part capacity a part holding 80 keys writes a
+    64 KiB bitmap and 2 B per key, not the 1 MiB dense table."""
+    f = CuckooFilter(1 << 18)
+    f.add(np.sort(_keys(80, 7)))
+    assert len(f.to_bytes()) == 28 + f.table.size // 8 + 2 * 80
